@@ -727,7 +727,7 @@ def _q_lsh_band_pairs(spark, sf):
 
 
 _IVF_CELLS = 8     # K floor (the value the sf0.01 driver corpus fits)
-_IVF_CELLS_MAX = 256  # literal-embedding sanity cap (see _ivf_k)
+_IVF_CELLS_MAX = 256  # centroid-matrix sanity cap (see _ivf_k)
 _IVF_VECS_PER_CELL = 250  # target cell size: K grows with the corpus
 _IVF_NPROBE = 2
 _IVF_ITERS = 2
@@ -738,10 +738,10 @@ def _ivf_k(n: int) -> int:
     the quadratic trap the 1×-vs-10× scale sample caught (the same-cell
     near-dup join grows as n²/K — measured exponent 2.13 with K=8 at
     20k vectors, 407 s); scaling K with n keeps cells ~constant-size so
-    the join stays linear. The cap bounds the literal centroid array
-    embedded in the map-side assign plan; at 10^9 vectors K would be
-    ~n/10³ with the centroids broadcast as a table instead of literals
-    (same plan shape, different transport)."""
+    the join stays linear. The cap bounds the centroid matrix the
+    map-side assign kernel closes over; at 10^9 vectors K would be
+    ~n/10³ with the centroids broadcast as a table instead (same plan
+    shape, different transport)."""
     return min(_IVF_CELLS_MAX, max(_IVF_CELLS, n // _IVF_VECS_PER_CELL))
 
 
@@ -756,7 +756,7 @@ def _ivf_nrm(c):
 
 
 def _cent_norm(cv) -> float:
-    """Driver-side ‖cv‖ for a literal centroid, replicating the SQL fold
+    """Driver-side ‖cv‖ for a centroid, replicating the SQL fold
     bit-for-bit (Python floats are IEEE doubles; math.sqrt is the same
     correctly-rounded sqrt): 0.0 + cv₀² + cv₁² + … then √. Precomputing
     the K centroid norms once removes a 64-step fold per (row, centroid)
@@ -769,163 +769,39 @@ def _cent_norm(cv) -> float:
     return math.sqrt(acc)
 
 
-def _ivf_assign(e, cent_rows):
-    """MAP-SIDE nearest-centroid assignment (cosine, centroid-id
-    tiebreak): the K driver-held centroids are embedded as a literal
-    ``array<struct<cid,cv>>`` and the argmax is a sequential fold over
-    that array — one whole-stage-codegen projection, ZERO shuffle (the
-    round-3 shape cross-joined then window-ranked n×K rows, a full
-    shuffle per Lloyd pass; VERDICT r3 #3). Centroids are what a real
-    IVF engine broadcasts; K rows on the driver is the same contract.
-
-    Tie semantics match the previous window (cos DESC, cid ASC): the
-    fold visits cids in ASCENDING order and replaces only on a STRICT
-    cosine improvement, so the lowest cid wins exact-double ties — the
-    cosine VALUE is bit-identical to the DuckDB oracle's window (the
-    centroid norms are precomputed driver-side with the same IEEE op
-    order as the SQL fold, see _cent_norm).
-
-    NOTE on form: the fold IS the fast shape here. A fully-unrolled
-    64-wide dot (flat element_at chain) was measured 2-3× SLOWER in
-    every context on Spark 4 — flat per-pair join cosine 9 s → 26 s,
-    candidate rescore 1.4 s → 2.9 s warm, and inside this fold 1.2 s →
-    11 s (K×dim expression tree breaks codegen entirely). Spark 4
-    codegens HOF lambdas over primitive arrays; the unrolled chain of
-    128 null-checked element_at calls blows the JIT method budget."""
-    carr = F.array(
-        *[
-            F.struct(
-                F.lit(int(cid)).alias("cid"),
-                F.array(*[F.lit(float(x)) for x in cv]).alias("cv"),
-                F.lit(_cent_norm(cv)).alias("nc"),
-            )
-            for cid, cv in cent_rows
-        ]
-    )
-    # the dot INSIDE the per-centroid fold stays the HOF form: unrolling
-    # it multiplies the expression tree by K×dim and breaks codegen
-    # (measured 1.2 s → 11 s). The centroid norms ARE hoisted — they are
-    # literals precomputed driver-side with the same IEEE op order.
-    nv = _ivf_nrm(F.col("v"))
-
-    def _cos(c):
-        return _ivf_dot(F.col("v"), c["cv"]) / (nv * c["nc"])
-
-    best = F.aggregate(
-        carr,
-        F.struct(
-            F.lit(-1).alias("cid"), F.lit(float("-inf")).alias("cos")
-        ),
-        lambda acc, c: F.when(
-            _cos(c) > acc["cos"],
-            F.struct(c["cid"].alias("cid"), _cos(c).alias("cos")),
-        ).otherwise(acc),
-    )
-    return e.select("vec_id", "v", best["cid"].alias("cell"))
-
-
 _NEARDUP_NPROBE = 2  # cells per vector in the near-dup candidate join
-
-
-def _ivf_assign2(e, cent_rows):
-    """Top-2 cell assignment (multi-probe): same map-side literal-
-    centroid fold as _ivf_assign, but the accumulator tracks the best
-    AND second-best cell, and each vector explodes into ≤2 (vec_id, v,
-    cell) rows. A near-dup pair straddling one cell boundary still
-    collides in the other vector's runner-up cell — measured recall@20
-    vs brute force rose 0.55 → see bench detail (VERDICT r3 #4).
-    Tie semantics at both ranks: ascending-cid visit + strict
-    improvement ⇒ lowest cid wins exact-double ties, matching the
-    oracle's (cos DESC, cid ASC) row_number. Like _ivf_assign, the dot
-    stays the HOF form (the measured-fast shape on Spark 4 — see the
-    _ivf_assign NOTE); only the centroid norms are hoisted, as
-    driver-precomputed literals with the same IEEE op order."""
-    carr = F.array(
-        *[
-            F.struct(
-                F.lit(int(cid)).alias("cid"),
-                F.array(*[F.lit(float(x)) for x in cv]).alias("cv"),
-                F.lit(_cent_norm(cv)).alias("nc"),
-            )
-            for cid, cv in cent_rows
-        ]
-    )
-    nv = _ivf_nrm(F.col("v"))
-
-    def _cos(c):
-        return _ivf_dot(F.col("v"), c["cv"]) / (nv * c["nc"])
-
-    ninf = F.lit(float("-inf"))
-    best2 = F.aggregate(
-        carr,
-        F.struct(
-            F.lit(-1).alias("c1"), ninf.alias("s1"),
-            F.lit(-1).alias("c2"), ninf.alias("s2"),
-        ),
-        lambda acc, c: F.when(
-            _cos(c) > acc["s1"],
-            F.struct(
-                c["cid"].alias("c1"), _cos(c).alias("s1"),
-                acc["c1"].alias("c2"), acc["s1"].alias("s2"),
-            ),
-        )
-        .when(
-            _cos(c) > acc["s2"],
-            F.struct(
-                acc["c1"].alias("c1"), acc["s1"].alias("s1"),
-                c["cid"].alias("c2"), _cos(c).alias("s2"),
-            ),
-        )
-        .otherwise(acc),
-    )
-    return (
-        e.select(
-            "vec_id",
-            "v",
-            F.posexplode(F.array(best2["c1"], best2["c2"])).alias(
-                "rank", "cell"
-            ),
-        )
-        # rank 0 is the best cell — the exact _ivf_assign output, so the
-        # one cached checkpoint serves BOTH the multi-probe near-dup
-        # join and the top-1 IVF scan (rank filter in _ivf_candidates)
-        .where(F.col("cell") >= 0)  # degenerate K=1 corpora
-    )
-
-
 _ASSIGN_SCHEMA = "vec_id long, v array<double>, rank int, cell int, nrm double"
 
 
 def _assign_kernel(cent_rows, nprobe):
     """Arrow e-step kernel factory (mapInPandas): nearest-centroid
-    assignment against the K closure-held centroids, emitting the top
-    ``nprobe`` cells per vector as (vec_id, v, rank, cell, nrm) rows —
-    rank 0 ≡ the _ivf_assign top-1 cell, rank 1 ≡ _ivf_assign2's
-    runner-up, nrm ≡ _ivf_nrm(v).
+    (cosine) assignment against the K closure-held centroids, emitting
+    the top ``nprobe`` cells per vector as (vec_id, v, rank, cell, nrm)
+    rows, nrm = ‖v‖.
 
     Why a kernel: Spark 4 interprets HigherOrderFunction lambdas per
-    element (no codegen), so the HOF fold spec (_ivf_assign/_ivf_assign2)
-    costs ~6 µs per (row, centroid) 64-dim dot — at 20k vectors × K=80
-    the fit's Lloyd e-steps plus the final multi-probe assignment were
-    ~40 s of the 10× scale sample's ann_ivf_topk wall. The same
-    mult-adds vectorize to well under a second, and the closure-held
-    centroid matrix (≤256×64 doubles = 128 KB) is exactly what a real
-    IVF engine broadcasts, so the plan stays a zero-shuffle map.
+    element (no codegen), so a SQL fold over literal centroids costs
+    ~6 µs per (row, centroid) 64-dim dot — at 20k vectors × K=80 the
+    fit's Lloyd e-steps plus the final multi-probe assignment were ~40 s
+    of the 10× scale sample's ann_ivf_topk wall. The same mult-adds
+    vectorize to well under a second, and the closure-held centroid
+    matrix (≤256×64 doubles = 128 KB) is exactly what a real IVF engine
+    broadcasts, so the plan stays a zero-shuffle map.
 
-    BIT-identity with the fold spec (pinned by
+    Spec, bit-for-bit (the oracle SQL ranks the same cosines by (cos
+    DESC, cid ASC); pinned against a sequential Python fold in
     test_assign_kernel_bit_identical_to_hof on the full corpus):
-    - dot: ``V*C[j]`` is the same per-element IEEE multiply as
-      zip_with, and ``np.cumsum(axis=1)`` is a strict left-to-right
-      prefix add chain with 0.0+p0 == p0 — the _cell_pair_cos recipe
-      (numpy's plain sum would pairwise-split and move bits).
-    - norms: nv replays _ivf_nrm the same way (np.sqrt is the
-      correctly-rounded IEEE sqrt); nc are the SAME _cent_norm Python
-      floats the fold embeds as literals.
-    - cosine: one multiply (nv·nc) then one divide, the fold's op order.
-    - ties: the fold visits cids ASCENDING and replaces on a STRICT
-      improvement (with demotion of best → second), which is top-nprobe
-      of a stable descending sort — ``np.argsort(-cosm, kind="stable")``
-      picks the lowest index (= lowest cid; cent_rows is cid-sorted) on
+    - cosine = dot(v, c) / (‖v‖·‖c‖), each dot a left-to-right add
+      chain from 0.0 like the _ivf_dot SQL fold: ``V*C[j]`` is the same
+      per-element IEEE multiply, and ``np.cumsum(axis=1)`` is a strict
+      left-to-right prefix add chain with 0.0+p0 == p0 — the
+      _cell_pair_cos recipe (numpy's plain sum would pairwise-split and
+      move bits). np.sqrt is the correctly-rounded IEEE sqrt; nc are the
+      _cent_norm Python floats; one multiply (nv·nc) then one divide.
+    - ties: visiting cids ASCENDING and replacing only on a STRICT
+      improvement (best demoted to second) is top-nprobe of a stable
+      descending sort — ``np.argsort(-cosm, kind="stable")`` picks the
+      lowest index (= lowest cid; cent_rows is cid-sorted) on
       exact-double ties at every rank.
     NaN/±inf cosines would compare differently (Spark SQL orders NaN
     largest, numpy argsort pushes NaN first under negation) but are
@@ -976,16 +852,16 @@ def _assign_kernel(cent_rows, nprobe):
 
 
 def _ivf_assign_kernel(e, cent_rows):
-    """Production top-1 e-step: the Arrow kernel at nprobe=1 (≡
-    _ivf_assign's output plus the nrm column; equivalence pinned in
-    tests). Used inside every Lloyd iteration of _ivf_fit."""
+    """Production top-1 e-step: the Arrow kernel at nprobe=1. Used
+    inside every Lloyd iteration of _ivf_fit."""
     return e.mapInPandas(_assign_kernel(cent_rows, 1), _ASSIGN_SCHEMA)
 
 
 def _ivf_assign2_kernel(e, cent_rows):
     """Production multi-probe assignment: the Arrow kernel at
-    nprobe=_NEARDUP_NPROBE (≡ _ivf_assign2 + _ivf_nrm; equivalence
-    pinned bit-for-bit in tests). Feeds the per-(session, sf)
+    nprobe=_NEARDUP_NPROBE. A near-dup pair straddling one cell boundary
+    still collides in the other vector's runner-up cell. Rank 0 is the
+    top-1 cell of _ivf_assign_kernel. Feeds the per-(session, sf)
     checkpointed assignment every IVF-family query shares."""
     return e.mapInPandas(
         _assign_kernel(cent_rows, _NEARDUP_NPROBE), _ASSIGN_SCHEMA
@@ -1076,7 +952,7 @@ def _ivf_assign2_cached(spark, sf):
     the fit cache (VERDICT r3 #3: share the fitted assignment instead of
     re-deriving it per invocation — the assign projection + checkpoint
     was ~1.5 s of every call's wall). Columns: vec_id, v, rank (0 = best
-    cell ≡ the _ivf_assign output, 1 = runner-up), cell, nrm."""
+    cell, 1 = runner-up), cell, nrm."""
     key = (spark.sparkContext.applicationId, sf)
     if key not in _IVF_ASSIGN2_CACHE:
         e = _ivf_e(spark, sf)
@@ -1294,7 +1170,7 @@ def _q_embedding_neardup_pairs(spark, sf):
     """Embedding-cosine near-dup pairs, sub-quadratically: vectors are
     bucketed by their k-means cell (the same coarse quantizer as
     ann_ivf_topk) with MULTI-PROBE: each vector lands in its top-2 cells
-    (_ivf_assign2), and only SHARED-CELL pairs are scored — grouped by
+    (_ivf_assign2_kernel), and only SHARED-CELL pairs are scored — grouped by
     the cell key instead of the O(n²) cross join, the cluster-bucketed
     shape near-dup detection takes at 10^9 vectors (with K sized ~n/10³
     the per-cell work stays bounded; the adaptive-K rule in _ivf_k keeps

@@ -13,7 +13,8 @@ Covers the BASELINE.json metric surface:
     $SPARK_GRAFT_SF_DIR
 
 Env knobs: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
-SPARK_GRAFT_CPUS (default 32), SPARK_GRAFT_BENCH_DOCS (default 20000),
+SPARK_GRAFT_CPUS (default: the CPUs this process may run on),
+SPARK_GRAFT_BENCH_DOCS (default 20000),
 SPARK_GRAFT_QUERY_REPS (per-query median-of-N, default 3).
 The N-vs-4N scaling experiment (the sandbox stand-in for N vs 4N
 executors — see _scaling_experiment) runs BY DEFAULT; disable with
@@ -1015,8 +1016,10 @@ def refresh_plan_dumps(spark, sf_dir: str, walls: dict | None = None) -> None:
 
 
 def main() -> None:
+    from searchengine_spark.session import default_cpus
+
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = default_cpus()
     n_docs = int(os.environ.get("SPARK_GRAFT_BENCH_DOCS", "20000"))
     sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1]) if "sf" in sf_dir else 0.0
 
@@ -1177,10 +1180,10 @@ def main() -> None:
 
 def _plans_only() -> None:
     """Refresh every committed plan dump without running the bench."""
-    from searchengine_spark.session import get_spark
+    from searchengine_spark.session import default_cpus, get_spark
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = default_cpus()
     spark = get_spark("bench-plans", master=f"local[{cpus}]", shuffle_partitions=cpus)
     try:
         refresh_plan_dumps(spark, sf_dir)

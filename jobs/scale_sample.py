@@ -121,11 +121,13 @@ def stage(spark, sf_dir: str, factor: int, out_dir: str) -> dict:
 
 
 def main() -> None:
+    from searchengine_spark.session import default_cpus, get_spark
+
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf-dir", default="/root/testdata/sf0.1")
     ap.add_argument("--factor", type=int, default=10)
     ap.add_argument("--reps", type=int, default=1)
-    ap.add_argument("--cpus", type=int, default=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+    ap.add_argument("--cpus", type=int, default=default_cpus())
     ap.add_argument(
         "--only",
         default=None,
@@ -134,7 +136,6 @@ def main() -> None:
     args = ap.parse_args()
 
     import __spark_entry__ as entry_mod
-    from searchengine_spark.session import get_spark
 
     spark = get_spark(
         "scale-sample", master=f"local[{args.cpus}]", shuffle_partitions=args.cpus

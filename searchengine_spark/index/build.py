@@ -1,24 +1,25 @@
 """Partition-parallel inverted-index build (SURVEY.md §7.3-§7.4).
 
-Pipeline (all DataFrame ops; Python only at the two Arrow UDF kernels):
+Pipeline (all DataFrame ops; Python only at the Arrow kernels):
 
     pages(url, warc_ts, html, text, lang)
-      → tokenize_doc (Arrow UDF: per-doc term/tf/positions + dl + Ld)
       → dense doc_id assignment (scalable: range-partition by url,
         per-partition counts → broadcast offsets; NO single-task window)
-      → docs(doc_id, url, warc_ts, lang, dl, ld)
-      → explode to (doc_id, term, tf, positions, dl)
-      → bucket = doc_id // bucket_docs        ← the skew strategy
-      → groupBy(term, bucket): sorted posting block, stats, block-max
-      → Arrow UDF: delta+varbyte encode → binary blobs
-      → postings(term, bucket, df_b, …, docs_vb, tfs_vb, pos_vb)
-        written term-clustered; lexicon(term, df, cf, max_tf) on top.
+      → tokenized_docs_arrow (mapInArrow: per-doc term/tf/positions + dl + Ld)
+      → docs(doc_id, url, warc_ts, lang, dl, ld, terms)
+      → per doc-range chunk, build_postings_local (mapInArrow, no
+        exchange): explode in-kernel, bucket = doc_id // bucket_docs
+        (the skew strategy), sort by (term, bucket, doc), block stats,
+        block-max, delta+varbyte encode → binary blobs
+      → postings(term, bucket, df_b, …, docs_vb, tfs_vb, pos_vb, dls_vb)
+        written (term, bucket)-sorted per file; lexicon(term, df, cf,
+        max_tf) on top.
 
 Skew / "salting" (north_rule): the salt is ``bucket = doc_id //
 bucket_docs`` — a *range* salt rather than a hash salt. Every
-``groupBy(term, bucket)`` group holds ≤ bucket_docs postings, so a
-stopword appearing in 10^11 documents becomes 10^11/bucket_docs
-bounded-size groups instead of one catastrophic reducer. Unlike hash
+``(term, bucket)`` block holds ≤ bucket_docs postings, so a stopword
+appearing in 10^11 documents becomes 10^11/bucket_docs bounded-size
+blocks instead of one unbounded posting row. Unlike hash
 salting it needs NO second-phase merge: bucket order == docID order, so
 the per-term posting list is simply the bucket sequence — the same
 document-partitioned layout real web indexes use, and the reference's
@@ -45,7 +46,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.storagelevel import StorageLevel
 
-from ..text.udfs import extract_text, tokenize_doc, tokenized_docs_arrow
+from ..text.udfs import extract_text, tokenized_docs_arrow
 from .varbyte import (
     encode_positions_flat,
     encode_sorted,
@@ -275,32 +276,6 @@ def _encode_block(
     return pd.DataFrame({"docs_vb": out_d, "tfs_vb": out_t, "pos_vb": out_p})
 
 
-ENC4_SCHEMA = T.StructType(
-    ENC_SCHEMA.fields + [T.StructField("dls_vb", T.BinaryType())]
-)
-
-
-@F.pandas_udf(ENC4_SCHEMA)
-def _encode_block_with_dl(
-    doc_ids: pd.Series, tfs: pd.Series, pos_flat: pd.Series, dls: pd.Series
-) -> pd.DataFrame:
-    """As _encode_block plus a varbyte per-posting doc-length array —
-    denormalized so BM25 scoring never joins the docs table per candidate
-    row (the norm lives next to the posting, as real engines store it);
-    only the ≤k winners fetch doc metadata."""
-    out_d, out_t, out_p, out_l = [], [], [], []
-    for d, t, p, dl in zip(doc_ids, tfs, pos_flat, dls):
-        da = np.asarray(d, dtype=np.int64)
-        ta = np.asarray(t, dtype=np.int64)
-        out_d.append(encode_sorted(da))
-        out_t.append(vb_encode(ta))
-        out_p.append(encode_positions_flat(np.asarray(p, dtype=np.int64), ta))
-        out_l.append(vb_encode(np.asarray(dl, dtype=np.int64)))
-    return pd.DataFrame(
-        {"docs_vb": out_d, "tfs_vb": out_t, "pos_vb": out_p, "dls_vb": out_l}
-    )
-
-
 # --------------------------------------------------------------------------
 # zero-shuffle local postings build (per-segment indexing)
 # --------------------------------------------------------------------------
@@ -324,57 +299,20 @@ POSTINGS_FIELDS = [
 POSTINGS_SCHEMA_STR = ", ".join(f"{n} {t}" for n, t in POSTINGS_FIELDS)
 
 
-def _encode_partition(batches):
-    """mapInArrow kernel: one partition's exploded posting rows →
-    encoded (term, bucket) blocks, entirely vectorized:
-
-      dictionary-encode terms (C++ hash) → one np.lexsort over
-      (doc_id, bucket, term_code) → ListArray.take gathers positions
-      (C++, flat values buffer) → group-boundary diff → per-group numpy
-      slices into the varbyte encoders.
-
-    Zero per-row Python objects and NO JVM sort or exchange anywhere:
-    the whole postings stage is map-side. Per-task memory is the
-    partition's posting arrays (bounded by IndexBuilder.docs_per_task).
-    A (term,bucket) whose doc range spans a partition boundary yields
-    one block per partition slice — readers union blocks (the invariant
-    chunked/streaming builds already rely on)."""
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
-    batch_list = [b for b in batches if b.num_rows]
-    if not batch_list:
-        return
-    tbl = pa.Table.from_batches(batch_list)
-    term_col = tbl.column("term").combine_chunks()
-    bucket = tbl.column("bucket").combine_chunks().to_numpy(zero_copy_only=False)
-    doc_id = (
-        tbl.column("doc_id").combine_chunks().to_numpy(zero_copy_only=False)
-        .astype(np.int64)
-    )
-    tf = (
-        tbl.column("tf").combine_chunks().to_numpy(zero_copy_only=False)
-        .astype(np.int64)
-    )
-    dl = (
-        tbl.column("dl").combine_chunks().to_numpy(zero_copy_only=False)
-        .astype(np.int64)
-    )
-    ld = tbl.column("ld").combine_chunks().to_numpy(zero_copy_only=False)
-    pos = tbl.column("positions").combine_chunks()
-    yield from _encode_arrays(term_col, bucket, doc_id, tf, dl, ld, pos)
-
-
 def _encode_partition_nested(batches, bucket_docs: int):
-    """mapInArrow kernel over NESTED docs rows (doc_id, dl, ld, terms):
-    the in-kernel analogue of JVM explode + _encode_partition, byte-
-    identical output (pinned by test). Exploding inside the kernel keeps
-    the JVM→Python Arrow stream at doc granularity — doc_id/dl/ld cross
-    the boundary once per DOC instead of once per posting row, and the
-    JVM never materializes the exploded copy. That halves the postings
-    phase's memory-bus traffic, which is what capped its 2→8-core
-    scaling (measured 0.60 exploded; the matched encode control without
-    the exploded IPC reads ~0.8)."""
+    """mapInArrow kernel: one partition's NESTED docs rows (doc_id, dl,
+    ld, terms) → encoded (term, bucket) blocks, entirely vectorized and
+    map-side — no JVM explode, sort or exchange anywhere in the postings
+    stage. Exploding inside the kernel keeps the JVM→Python Arrow stream
+    at doc granularity: doc_id/dl/ld cross the boundary once per DOC
+    instead of once per posting row, and the JVM never materializes an
+    exploded copy (a JVM-side explode measured 0.60 2→8-core scaling on
+    this phase, memory-bus bound; the matched encode control reads ~0.8).
+
+    Per-task memory is the partition's posting arrays. A (term, bucket)
+    whose doc range spans a partition boundary yields one block per
+    partition slice — readers union blocks (the invariant
+    chunked/streaming builds already rely on)."""
     import pyarrow as pa
 
     batch_list = [b for b in batches if b.num_rows]
@@ -392,8 +330,7 @@ def _encode_partition_nested(batches, bucket_docs: int):
     ld_doc = tbl.column("ld").combine_chunks().to_numpy(zero_copy_only=False)
     terms = tbl.column("terms").combine_chunks()
     # a NULL terms entry contributes no postings: flatten() skips it, so
-    # its repeat count must be 0 (the JVM-explode path dropped such rows
-    # silently; our own docs writer never emits them)
+    # its repeat count must be 0 (our own docs writer never emits them)
     counts = np.asarray(terms.value_lengths().fill_null(0))
     structs = terms.flatten()
     term_col = structs.field("term")
@@ -420,9 +357,13 @@ def _encode_partition_nested(batches, bucket_docs: int):
 
 
 def _encode_arrays(term_col, bucket, doc_id, tf, dl, ld, pos):
-    """Shared vectorized encode core: flat per-posting arrays (term as a
-    pyarrow string array, positions as a pyarrow list array, the rest
-    numpy) → encoded (term, bucket) block batches."""
+    """Vectorized encode core: flat per-posting arrays (term as a pyarrow
+    string array, positions as a pyarrow list array, the rest numpy) →
+    encoded (term, bucket) block batches: dictionary-encode terms (C++
+    hash) → one np.lexsort over (doc_id, bucket, term rank) →
+    ListArray.take gathers positions → group-boundary diff → one
+    reduceat per stat and one varbyte encode per stream, carved into
+    per-group blobs."""
     import pyarrow as pa
     import pyarrow.compute as pc
 
@@ -526,6 +467,8 @@ def _encode_arrays(term_col, bucket, doc_id, tf, dl, ld, pos):
     tbuf, tends = vb_encode_all(tf_s)
     tfs_vb = _bin_array(tbuf, _group_offsets(tends, bounds))
 
+    # dls_vb: the per-posting doc length, denormalized next to the
+    # posting so BM25 scoring never joins the docs table per candidate
     lbuf, lends = vb_encode_all(dl_s)
     dls_vb = _bin_array(lbuf, _group_offsets(lends, bounds))
 
@@ -570,35 +513,13 @@ def _encode_arrays(term_col, bucket, doc_id, tf, dl, ld, pos):
 def build_postings_local(
     docs_tokenized: DataFrame, bucket_docs: int = DEFAULT_BUCKET_DOCS
 ) -> DataFrame:
-    """Postings WITHOUT any shuffle: explode (JVM) → vectorized
-    per-partition encode kernel. The per-segment indexing shape real web
-    indexes use — the round-1 groupBy path's (term,bucket) exchange moves
-    the entire tokenized corpus through the network at 10^12 docs; this
-    moves nothing (the only cross-node data motion left in the whole
-    build is the id-assignment range shuffle of raw pages).
-
-    The explode happens INSIDE the Arrow kernel (`SPARK_GRAFT_ENCODE=
-    exploded` restores the JVM-explode A/B path): the JVM→Python stream
-    stays doc-granular, so doc_id/dl/ld cross once per doc, not once per
-    posting — measurably better memory-bus behavior at high core counts
-    (the phase's 2→8 scaling limiter)."""
-    if os.environ.get("SPARK_GRAFT_ENCODE", "") == "exploded":
-        dt = docs_tokenized.select(
-            "doc_id",
-            "dl",
-            "ld",
-            F.explode("terms").alias("t"),
-        ).select(
-            F.col("t.term").alias("term"),
-            (F.col("doc_id") / F.lit(bucket_docs)).cast("int").alias("bucket"),
-            "doc_id",
-            F.col("t.tf").alias("tf"),
-            "dl",
-            "ld",
-            F.col("t.positions").alias("positions"),
-        )
-        return dt.mapInArrow(_encode_partition, schema=POSTINGS_SCHEMA_STR)
-
+    """Postings WITHOUT any shuffle: one per-partition Arrow kernel
+    (``_encode_partition_nested``) explodes, sorts and encodes each
+    partition's docs. The per-segment indexing shape real web indexes
+    use — a (term, bucket) exchange would move the entire tokenized
+    corpus through the network at 10^12 docs; this moves nothing (the
+    only cross-node data motion left in the whole build is the
+    id-assignment range shuffle of raw pages)."""
     def run(batches):
         yield from _encode_partition_nested(batches, bucket_docs)
 
@@ -611,101 +532,6 @@ def build_postings_local(
 # build
 # --------------------------------------------------------------------------
 
-def tokenize_pages(pages: DataFrame) -> DataFrame:
-    tk = pages.select(
-        "url",
-        "warc_ts",
-        "lang",
-        tokenize_doc(F.col("text")).alias("tk"),
-    )
-    return tk.select(
-        "url", "warc_ts", "lang", "tk.terms", "tk.dl", "tk.ld"
-    )
-
-
-def build_postings_for_docs(
-    docs_tokenized: DataFrame, bucket_docs: int = DEFAULT_BUCKET_DOCS
-) -> DataFrame:
-    """docs_tokenized: (doc_id, dl, terms[]) → postings blocks."""
-    dt = docs_tokenized.select(
-        "doc_id",
-        "dl",
-        "ld",
-        F.explode("terms").alias("t"),
-    ).select(
-        "doc_id",
-        "dl",
-        "ld",
-        F.col("t.term").alias("term"),
-        F.col("t.tf").alias("tf"),
-        F.col("t.positions").alias("positions"),
-    )
-    dt = dt.withColumn(
-        "bucket", (F.col("doc_id") / F.lit(bucket_docs)).cast("int")
-    )
-    # the sorted struct carries the encoder inputs incl. the per-posting
-    # doc length (denormalized norm for join-free BM25 scoring); per-doc
-    # ld enters the block stats through a separate min() aggregate
-    grouped = dt.groupBy("term", "bucket").agg(
-        F.sort_array(
-            F.collect_list(F.struct("doc_id", "tf", "positions", "dl"))
-        ).alias("plist"),
-        F.count(F.lit(1)).cast("int").alias("df_b"),
-        F.sum("tf").alias("cf_b"),
-        # cast: tf is int32 (tokenizer schema) but the on-disk contract is
-        # int64 (POSTINGS_FIELDS) — without it this path and the
-        # zero-shuffle path write different physical parquet schemas into
-        # one postings directory, which the vectorized reader rejects
-        F.max("tf").cast("long").alias("max_tf"),
-        F.min("dl").alias("min_dl"),
-        # block-min Ld: upper-bounds the tfidf_ref score of any doc in the
-        # block (score = acc/Ld), the tf-idf analogue of BM25's min_dl
-        F.min("ld").alias("min_ld"),
-        F.min("doc_id").alias("doc_first"),
-        F.max("doc_id").alias("doc_last"),
-    )
-    # aligned parallel arrays (JVM transform; keeps Arrow transfer columnar)
-    grouped = grouped.select(
-        "term",
-        "bucket",
-        "df_b",
-        "cf_b",
-        "max_tf",
-        "min_dl",
-        "min_ld",
-        "doc_first",
-        "doc_last",
-        F.expr("transform(plist, x -> x.doc_id)").alias("d_arr"),
-        F.expr("transform(plist, x -> x.tf)").alias("t_arr"),
-        F.expr("flatten(transform(plist, x -> x.positions))").alias("p_flat"),
-        F.expr("transform(plist, x -> x.dl)").alias("dl_arr"),
-    )
-    enc = grouped.withColumn(
-        "enc",
-        _encode_block_with_dl(
-            F.col("d_arr"), F.col("t_arr"), F.col("p_flat"), F.col("dl_arr")
-        ),
-    )
-    return enc.select(
-        "term",
-        "bucket",
-        "df_b",
-        "cf_b",
-        "max_tf",
-        "min_dl",
-        "min_ld",
-        "doc_first",
-        "doc_last",
-        # block-max metadata for WAND (1+ln is monotone in tf, so the
-        # block's max tf-idf weight is 1+ln(max_tf))
-        (F.lit(1.0) + F.log(F.col("max_tf").cast("double"))).alias("max_wdt"),
-        F.col("enc.docs_vb").alias("docs_vb"),
-        F.col("enc.tfs_vb").alias("tfs_vb"),
-        F.col("enc.pos_vb").alias("pos_vb"),
-        F.col("enc.dls_vb").alias("dls_vb"),
-    )
-
-
 class IndexBuilder:
     """Chunked, resumable index build with per-chunk lineage + metrics."""
 
@@ -716,7 +542,6 @@ class IndexBuilder:
         bucket_docs: int = DEFAULT_BUCKET_DOCS,
         chunk_docs: int | None = None,
         docs_per_task: int = 25_000,
-        local_postings: bool = True,
         id_base: int = 0,
     ) -> None:
         self.spark = spark
@@ -733,16 +558,13 @@ class IndexBuilder:
             )
         self.id_base = id_base
         self.chunk_docs = chunk_docs  # None → single chunk
-        # True → zero-shuffle per-segment postings (build_postings_local);
-        # False → the groupBy(term,bucket) exchange path (kept for A/B)
-        self.local_postings = local_postings
-        # task-count sizing target: partition counts SCALE WITH DATA, not
-        # with the core count — a 2× corpus over a fixed partition count
-        # doubles per-task aggregation state, and once collect_list's
-        # hash aggregate outgrows execution memory it falls back to
-        # sort+spill (measured 4.4× stage blowup at 400k docs / 8
-        # partitions; 2.2× recovered by resizing). At 10^12 docs this is
-        # ~40M tasks per stage — the cluster-sized shape.
+        # task-count sizing target (_task_count) for the fallback
+        # id-assignment exchange: partition counts SCALE WITH DATA, not
+        # with the core count, so the docs files those tasks write — and
+        # the postings-kernel tasks that read them back, each holding one
+        # partition's posting arrays — stay ~docs_per_task docs as the
+        # corpus grows. At 10^12 docs this is ~40M tasks per stage — the
+        # cluster-sized shape.
         self.docs_per_task = docs_per_task
         ensure_layout(out_dir)
 
@@ -801,27 +623,12 @@ class IndexBuilder:
                 num_partitions=self._task_count,
             )
             phases["id_stats"] = time.time() - pt
-            if os.environ.get("SPARK_GRAFT_TOKENIZE", "") == "pandas":
-                # A/B reference path: the pandas_udf kernel (identical
-                # output, pinned by test; ~2.5× slower end to end)
-                tk = with_ids.withColumn("tk", tokenize_doc(F.col("text")))
-                docs = tk.select(
-                    "doc_id",
-                    "url",
-                    "warc_ts",
-                    "lang",
-                    F.col("tk.dl").alias("dl"),
-                    F.col("tk.ld").alias("ld"),
-                    F.col("tk.terms").alias("terms"),
-                )
-            else:
-                # columnar mapInArrow kernel: no per-event Python, no
-                # pandas→Arrow struct conversion; partition-preserving so
-                # the zero-shuffle fast path above still holds
-                docs = tokenized_docs_arrow(
-                    with_ids.select("doc_id", "url", "warc_ts", "lang", "text"),
-                    passthrough=("doc_id", "url", "warc_ts", "lang"),
-                )
+            # columnar mapInArrow kernel: partition-preserving, so the
+            # zero-shuffle fast path above still holds
+            docs = tokenized_docs_arrow(
+                with_ids.select("doc_id", "url", "warc_ts", "lang", "text"),
+                passthrough=("doc_id", "url", "warc_ts", "lang"),
+            )
             dt0 = time.time()
             # row count + corpus meta ride the WRITE job itself
             # (df.observe): no separate readback job — the small-job
@@ -891,14 +698,6 @@ class IndexBuilder:
         # (term,bucket) group lives in exactly one chunk
         chunk = max(self.bucket_docs, (chunk // self.bucket_docs) * self.bucket_docs)
         n_chunks = max(1, math.ceil(n_docs / chunk))
-        # size the (term,bucket) groupBy shuffle by the chunk's volume —
-        # restores the caller's setting afterwards
-        conf = self.spark.conf
-        old_sp = conf.get("spark.sql.shuffle.partitions")
-        conf.set(
-            "spark.sql.shuffle.partitions",
-            str(self._task_count(min(chunk, n_docs))),
-        )
         stats = []
         for c in range(n_chunks):
             name = f"postings_chunk_{c:05d}"
@@ -912,18 +711,9 @@ class IndexBuilder:
             part = docs_full.filter(
                 (F.col("doc_id") >= lo) & (F.col("doc_id") < hi)
             ).select("doc_id", "dl", "ld", "terms")
-            if self.local_postings:
-                # zero-shuffle: local sort + streaming encoder; output is
-                # already (term,bucket)-sorted within each partition
-                post = build_postings_local(part, self.bucket_docs)
-            else:
-                post = build_postings_for_docs(part, self.bucket_docs)
-                # sort the groupBy(term,bucket) output in place — a second
-                # repartition("term") exchange only re-clusters already-
-                # encoded blobs; per-file (term,bucket) order gives parquet
-                # row-group min/max stats the same In(term) skipping at
-                # scan time without an extra shuffle of the encoded index
-                post = post.sortWithinPartitions("term", "bucket")
+            # zero-shuffle: the encode kernel's output is already
+            # (term,bucket)-sorted within each partition
+            post = build_postings_local(part, self.bucket_docs)
             # block/posting/byte metrics ride the write job (df.observe) —
             # the round-1 readback job re-read every blob byte just to sum
             # lengths
@@ -960,7 +750,6 @@ class IndexBuilder:
             }
             self._commit(name, m)
             stats.append(m)
-        conf.set("spark.sql.shuffle.partitions", old_sp)
 
         pt = time.time()
         if not self._committed("lexicon"):

@@ -24,7 +24,7 @@ def vb_encode_all(values: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
     (uint8 byte buffer, int64 per-value CUMULATIVE byte ends). The ends
     array lets a caller slice the buffer into arbitrary contiguous
     value segments without re-encoding — the whole-partition encode of
-    ``index/build._encode_partition`` carves per-(term,bucket) blobs
+    ``index/build._encode_arrays`` carves per-(term,bucket) blobs
     from ONE encode instead of one encoder call per group."""
     n = np.asarray(values, dtype=_U64)
     if n.size == 0:

@@ -38,13 +38,20 @@ if _local_dir:
     ENGINE_CONFS["spark.local.dir"] = _local_dir
 
 
+def default_cpus() -> int:
+    """Local-mode core count: ``SPARK_GRAFT_CPUS`` if set, else the CPUs
+    this process may run on."""
+    env = os.environ.get("SPARK_GRAFT_CPUS")
+    return int(env) if env else len(os.sched_getaffinity(0))
+
+
 def get_spark(
     app: str = "searchengine-spark",
     master: str | None = None,
     shuffle_partitions: int | None = None,
     extra: dict[str, str] | None = None,
 ) -> SparkSession:
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = default_cpus()
     b = SparkSession.builder.appName(app)
     b = b.master(master or f"local[{cpus}]")
     for k, v in ENGINE_CONFS.items():

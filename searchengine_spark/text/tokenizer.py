@@ -79,8 +79,8 @@ def token_events(raw: str, stem: Callable[[str], str]) -> tuple:
     term at the current position; the hyphen concat term advances 0
     (SimpleEngine.java:132). A pure function of the raw token, so the
     Arrow batch kernel memoizes it per distinct raw token
-    (``text/udfs._tokenize_batch``) — Zipf text makes that a dict hit on
-    the vast majority of tokens."""
+    (``text/udfs._tokenize_batch_columnar``) — Zipf text makes that a
+    dict hit on the vast majority of tokens."""
     tok = strip_nonalnum(raw)  # SimpleTokenStream.nextToken (T2)
     if not tok:
         return ()  # empty tokens are skipped, no position consumed (T8)

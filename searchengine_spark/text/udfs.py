@@ -7,12 +7,12 @@ Layers:
     is JSON-field access, SimpleEngine.java:114; our web-page analogue is
     a deterministic template parse with a generic tag-strip fallback —
     byte-identical to the ``text`` column per url, tested)
-  - ``tokenize_doc``      text → per-doc aggregated term vector
-    (term, tf, positions[]) + dl + Ld in ONE pass: groupBy(term,doc) is
-    pre-aggregated inside the UDF so the shuffle moves per-doc-term rows,
-    never per-token rows
-  - ``simple_tokens``     lowercase whitespace tokens (SQL-expressible
-    semantics, used by the DuckDB-oracle-checked analytics queries)
+  - ``tokenized_docs_arrow``  text → per-doc aggregated term vector
+    (term, tf, positions[]) + dl + Ld in ONE mapInArrow pass: (term, doc)
+    is pre-aggregated inside the kernel, so downstream stages see
+    per-doc-term entries, never per-token rows
+  - ``shingled_docs_arrow``   text → distinct 3-token shingles per doc
+    (the dedup/LSH feeder)
 """
 
 from __future__ import annotations
@@ -29,7 +29,7 @@ from pyspark.sql import types as T
 
 from .javahash import _final_capacity, spread_string_hash
 from .porter import StemCache
-from .tokenizer import doc_ld, java_ws_split, token_events, tokenize_events
+from .tokenizer import token_events
 
 # --------------------------------------------------------------------------
 # extract_text
@@ -57,82 +57,29 @@ def extract_text(html_col: pd.Series) -> pd.Series:
 
 
 # --------------------------------------------------------------------------
-# tokenize_doc: text -> (terms[], dl, ld)
+# Columnar tokenize: text -> (terms[], dl, ld), the Arrow-native build kernel
 # --------------------------------------------------------------------------
 
-TOKENIZED_SCHEMA = T.StructType(
-    [
-        T.StructField(
-            "terms",
-            T.ArrayType(
-                T.StructType(
-                    [
-                        T.StructField("term", T.StringType()),
-                        T.StructField("tf", T.IntegerType()),
-                        T.StructField("positions", T.ArrayType(T.IntegerType())),
-                    ]
-                )
-            ),
-        ),
-        # dl = Σ tf (term-event count, the BM25 doc length we define;
-        # includes hyphen-expansion concat terms)
-        T.StructField("dl", T.IntegerType()),
-        # ld = reference Ld (float64, Java-HashMap-order summation)
-        T.StructField("ld", T.DoubleType()),
-    ]
+# array<struct<term, tf, positions>>: one entry per distinct term of a
+# doc, in first-occurrence order, positions in occurrence order
+TERMS_TYPE = T.ArrayType(
+    T.StructType(
+        [
+            T.StructField("term", T.StringType()),
+            T.StructField("tf", T.IntegerType()),
+            T.StructField("positions", T.ArrayType(T.IntegerType())),
+        ]
+    )
 )
 
-
-def _tokenize_batch(texts: pd.Series) -> pd.DataFrame:
-    stems = StemCache()  # memoized across the whole Arrow batch
-    # raw-token → (term, advance) events memo: the per-token pipeline
-    # (edge strip, apostrophes, hyphen expansion, stem) is a pure
-    # function of the raw token, and Zipf text repeats tokens heavily —
-    # distinct raw tokens per batch are a small fraction of total, so
-    # most tokens cost one dict hit instead of regex+stem work
-    tok_events: dict[str, tuple] = {}
-    out_terms, out_dl, out_ld = [], [], []
-    for text in texts:
-        acc: dict[str, list[int]] = {}
-        if text:
-            pos = 1
-            for raw in java_ws_split(text):
-                ev = tok_events.get(raw)
-                if ev is None:
-                    ev = token_events(raw, stems.stem)
-                    tok_events[raw] = ev
-                for term, adv in ev:
-                    acc.setdefault(term, []).append(pos)
-                    pos += adv
-        out_terms.append(
-            [
-                {"term": t, "tf": len(ps), "positions": ps}
-                for t, ps in acc.items()
-            ]
-        )
-        out_dl.append(sum(len(ps) for ps in acc.values()))
-        out_ld.append(doc_ld({t: len(ps) for t, ps in acc.items()}))
-    return pd.DataFrame({"terms": out_terms, "dl": out_dl, "ld": out_ld})
-
-
-@F.pandas_udf(TOKENIZED_SCHEMA)
-def tokenize_doc(texts: pd.Series) -> pd.DataFrame:
-    return _tokenize_batch(texts)
-
-
-# --------------------------------------------------------------------------
-# Columnar tokenize: the Arrow-native build kernel
-# --------------------------------------------------------------------------
-#
-# Same semantics as _tokenize_batch (pinned by
-# tests/test_text_pipeline.py::test_tokenize_columnar_identical_to_pandas_kernel
-# on fuzz corpora, ld compared BITWISE), but the per-token-event Python
-# loop, the per-doc dicts, and the list-of-dict struct materialization are
-# replaced by factorize + numpy segment ops + direct pyarrow ListArray
-# construction. The pandas kernel spent ~2/3 of the docs phase on Python
-# object churn (profiled: 9.6 s/100k docs building {"term","tf","positions"}
-# dicts alone); this kernel emits the identical nested Arrow layout with
-# zero per-event Python.
+# Semantics: text/tokenizer.tokenize_events aggregated per doc, dl = the
+# event count and ld = tokenizer.doc_ld (pinned by
+# tests/test_text_pipeline.py::test_tokenize_columnar_matches_tokenizer_reference
+# on fuzz corpora, ld compared BITWISE). The per-token-event work is
+# factorize + numpy segment ops + direct pyarrow ListArray construction:
+# zero per-event Python objects (a per-doc dict kernel spent ~2/3 of the
+# docs phase on Python object churn — profiled 9.6 s/100k docs building
+# {"term","tf","positions"} dicts alone).
 #
 # Bit-identity notes (the same traps CLAUDE.md pins elsewhere):
 #   - Ld fold: Java sums (1+ln tf)² in HashMap-replay order; here each
@@ -148,8 +95,8 @@ _TOKEN_EVENTS_MEMO: dict[str, tuple] = {}
 
 # RE2 spelling of tokenizer._JAVA_WS (pyarrow's split_pattern_regex is
 # RE2: \u escapes must be \x{…}); equivalence to the Python re is pinned
-# by test_tokenize_columnar_identical_to_pandas_kernel (the pandas kernel
-# splits with the Python pattern)
+# by test_tokenize_columnar_matches_tokenizer_reference (the reference
+# splits with the Python pattern, tokenizer.java_ws_split)
 _JAVA_WS_RE2 = (
     "[\\t\\n\\x{0b}\\x{0c}\\r\\x{1c}-\\x{1f} \\x{1680}\\x{2000}-\\x{2006}"
     "\\x{2008}-\\x{200a}\\x{2028}\\x{2029}\\x{205f}\\x{3000}]+"
@@ -160,7 +107,7 @@ def _tokenize_batch_columnar(texts) -> tuple[pa.Array, np.ndarray, np.ndarray]:
     """texts: sequence of str|None → (terms ListArray, dl int32, ld float64).
 
     The returned ``terms`` is the same array<struct<term,tf,positions>>
-    layout TOKENIZED_SCHEMA declares, built directly as Arrow buffers.
+    layout TERMS_TYPE declares, built directly as Arrow buffers.
 
     Per-batch bound: list offsets are int32 (matching Spark's non-large
     Arrow list layout), so one input batch may carry at most 2^31-1
@@ -205,7 +152,7 @@ def _tokenize_batch_columnar(texts) -> tuple[pa.Array, np.ndarray, np.ndarray]:
     )
 
     # per-UNIQUE-raw-token events (memoized across batches — pure function
-    # of the raw token, exactly like the pandas kernel's per-batch memo)
+    # of the raw token, see tokenizer.token_events)
     memo = _TOKEN_EVENTS_MEMO
     if len(memo) > 1_000_000:  # bound worker memory on open vocabularies
         memo.clear()
@@ -249,7 +196,7 @@ def _tokenize_batch_columnar(texts) -> tuple[pa.Array, np.ndarray, np.ndarray]:
         ev_tid = ev_adv = ev_doc = np.zeros(0, dtype=np.int64)
 
     # positions: event i sits at 1 + Σ advs of previous events in its doc
-    # (the pandas kernel records pos BEFORE advancing by adv)
+    # (tokenize_events records pos BEFORE advancing by adv)
     prev = np.cumsum(ev_adv) - ev_adv
     dl = np.bincount(ev_doc, minlength=n).astype(np.int64)
     doc_ev_off = np.concatenate(([0], np.cumsum(dl)))
@@ -260,7 +207,7 @@ def _tokenize_batch_columnar(texts) -> tuple[pa.Array, np.ndarray, np.ndarray]:
 
     # group events by (doc, term): stable, so within-group position order
     # is occurrence order, and each group's first element is its first
-    # occurrence — the dict-insertion order the pandas kernel produced
+    # occurrence — the first-occurrence term order doc_ld's replay expects
     order1 = np.lexsort((ev_tid, ev_doc))
     s_doc = ev_doc[order1]
     s_tid = ev_tid[order1]
@@ -354,9 +301,12 @@ def tokenized_docs_arrow(df, passthrough: tuple[str, ...] | None = None):
     out_schema = T.StructType(
         [in_fields[c] for c in passthrough]
         + [
+            # dl = Σ tf (term-event count, the BM25 doc length we
+            # define; includes hyphen-expansion concat terms)
             T.StructField("dl", T.IntegerType()),
+            # ld = reference Ld (float64, Java-HashMap-order summation)
             T.StructField("ld", T.DoubleType()),
-            T.StructField("terms", TOKENIZED_SCHEMA["terms"].dataType),
+            T.StructField("terms", TERMS_TYPE),
         ]
     )
     cols = list(passthrough)
@@ -473,17 +423,3 @@ def shingled_docs_arrow(df):
         run, f"doc_id {id_type}, shingle string"
     )
 
-
-# --------------------------------------------------------------------------
-# simple_tokens: SQL-oracle-compatible tokenization (documents table)
-# --------------------------------------------------------------------------
-
-
-@F.pandas_udf(T.ArrayType(T.StringType()))
-def simple_tokens(texts: pd.Series) -> pd.Series:
-    """Lowercase split on single spaces — matches DuckDB
-    ``string_split(lower(text), ' ')`` with empties dropped, so every
-    analytics query built on it has an exact ANSI-SQL oracle."""
-    return texts.map(
-        lambda t: [w for w in t.lower().split(" ") if w] if t is not None else None
-    )

@@ -32,7 +32,7 @@ def test_ann_ivf_scans_fraction(spark):
     e = entry_mod._ivf_e(spark, SF_DIR)
     cent_rows = entry_mod._ivf_fit(e)
     sizes = (
-        entry_mod._ivf_assign(e, cent_rows).groupBy("cell").count().collect()
+        entry_mod._ivf_assign_kernel(e, cent_rows).groupBy("cell").count().collect()
     )
     total = sum(r["count"] for r in sizes)
     probed = sorted((r["count"] for r in sizes), reverse=True)[
@@ -78,10 +78,10 @@ def test_jaccard_hot_shingle_cap(spark, tmp_path):
 
 
 def test_cent_norm_bit_identical_to_sql_fold(spark):
-    """The driver-precomputed centroid norm (_cent_norm, hoisted into the
-    assign folds as a literal) must reproduce the SQL HOF fold
-    _ivf_nrm BIT-for-bit — same IEEE left-to-right add chain and the
-    same correctly-rounded sqrt — on real embedding vectors, so hoisting
+    """The driver-precomputed centroid norm (_cent_norm, the ‖c‖ the
+    assign kernel divides by) must reproduce the SQL HOF fold _ivf_nrm
+    BIT-for-bit — same IEEE left-to-right add chain and the same
+    correctly-rounded sqrt — on real embedding vectors, so precomputing
     it cannot move a single cosine bit."""
     import math
     import struct
@@ -117,11 +117,7 @@ def test_cell_pair_cos_kernel_bit_identical_to_hof_fold(spark):
     em = entry_mod
     e = em._ivf_e(spark, SF_DIR)
     cent_rows = em._ivf_fit_cached(spark, SF_DIR)
-    assign = (
-        em._ivf_assign2(e, cent_rows)
-        .withColumn("nrm", em._ivf_nrm(F.col("v")))
-        .localCheckpoint()
-    )
+    assign = em._ivf_assign2_kernel(e, cent_rows).localCheckpoint()
     a = assign.select(
         F.col("cell"), F.col("vec_id").alias("vec_a"),
         F.col("v").alias("va"), F.col("nrm").alias("na"),
@@ -163,80 +159,96 @@ def test_cell_pair_cos_kernel_bit_identical_to_hof_fold(spark):
     assert mismatches == []
 
 
-def test_assign_kernel_bit_identical_to_hof(spark):
-    """The Arrow e-step kernel (_assign_kernel) must reproduce the HOF
-    fold spec EXACTLY on the full sf0.01 corpus with the real fitted
-    centroids: same (rank, cell) per vector as _ivf_assign2 and
-    bit-identical nrm vs _ivf_nrm (the nrm feeds _cell_pair_cos
-    divisions, so a single moved bit would shift near-dup cosines)."""
-    import struct
+def _fold_assign(vecs, cent_rows, nprobe):
+    """Sequential reference for the assign kernel: cids visited in
+    ascending order, a cell enters rank r only on a STRICT cosine
+    improvement over the current rank-r holder (which is demoted), and
+    cosine = dot / (‖v‖·‖c‖) with every dot a left-to-right add chain
+    from 0.0. Returns ({(vec_id, rank): cell}, {vec_id: ‖v‖})."""
+    import math
 
-    from pyspark.sql import functions as F
+    def dot(x, y):
+        acc = 0.0
+        for a, b in zip(x, y):
+            acc = acc + a * b
+        return acc
+
+    cents = [(cid, cv, math.sqrt(dot(cv, cv))) for cid, cv in sorted(cent_rows)]
+    cells, nrm = {}, {}
+    for vid, v in vecs:
+        nv = math.sqrt(dot(v, v))
+        best = [(-1, float("-inf"))] * nprobe
+        for cid, cv, nc in cents:
+            cos = dot(v, cv) / (nv * nc)
+            for r in range(nprobe):
+                if cos > best[r][1]:
+                    best = best[:r] + [(cid, cos)] + best[r:-1]
+                    break
+        for r, (cid, _) in enumerate(best):
+            if cid >= 0:
+                cells[(vid, r)] = cid
+        nrm[vid] = nv
+    return cells, nrm
+
+
+def test_assign_kernel_bit_identical_to_hof(spark):
+    """The Arrow e-step kernel (_assign_kernel) must reproduce the
+    sequential cosine fold (_fold_assign — the fold the SQL HOF form
+    spelled) EXACTLY on the full sf0.01 corpus with the real fitted
+    centroids: same (rank, cell) per vector and bit-identical nrm (the
+    nrm feeds _cell_pair_cos divisions, so a single moved bit would
+    shift near-dup cosines)."""
+    import struct
 
     em = entry_mod
     e = em._ivf_e(spark, SF_DIR)
     cent_rows = em._ivf_fit_cached(spark, SF_DIR)
-    hof = {
-        (r["vec_id"], r["rank"]): r["cell"]
-        for r in em._ivf_assign2(e, cent_rows).collect()
-    }
-    hof_nrm = {
-        r["vec_id"]: r["n"]
-        for r in e.select("vec_id", em._ivf_nrm(F.col("v")).alias("n")).collect()
-    }
+    vecs = [(r["vec_id"], list(r["v"])) for r in e.collect()]
+    want, want_nrm = _fold_assign(vecs, cent_rows, em._NEARDUP_NPROBE)
     kern_rows = em._ivf_assign2_kernel(e, cent_rows).collect()
     kern = {(r["vec_id"], r["rank"]): r["cell"] for r in kern_rows}
-    assert kern == hof
+    assert kern == want
     assert len(kern) == 1000  # 500 vectors × 2 probe cells
     nrm_mismatch = [
         r["vec_id"]
         for r in kern_rows
         if struct.pack("<d", r["nrm"])
-        != struct.pack("<d", hof_nrm[r["vec_id"]])
+        != struct.pack("<d", want_nrm[r["vec_id"]])
     ]
     assert nrm_mismatch == []
 
 
 def test_assign_kernel_noncontiguous_cids_and_large_k(spark):
-    """Kernel ≡ HOF must also hold off the fitted-centroid happy path:
+    """Kernel ≡ fold must also hold off the fitted-centroid happy path:
     K=37 fabricated centroids with NON-CONTIGUOUS cids (3i+1 — Lloyd
     drops empty cells, so production cid gaps are real) exercises the
     cids[argsort] indirection at a K the sf0.01 fit never reaches, for
     both the top-1 and the multi-probe kernel."""
-    from pyspark.sql import functions as F
-
     em = entry_mod
     e = em._ivf_e(spark, SF_DIR)
-    vecs = [list(r["v"]) for r in e.orderBy("vec_id").limit(37).collect()]
-    cent_rows = [(3 * i + 1, cv) for i, cv in enumerate(vecs)]
-    hof2 = {
-        (r["vec_id"], r["rank"]): r["cell"]
-        for r in em._ivf_assign2(e, cent_rows).collect()
-    }
+    vecs = [(r["vec_id"], list(r["v"])) for r in e.collect()]
+    cent_rows = [(3 * i + 1, cv) for i, (_, cv) in enumerate(sorted(vecs)[:37])]
+    want2, _ = _fold_assign(vecs, cent_rows, 2)
     kern2 = {
         (r["vec_id"], r["rank"]): r["cell"]
         for r in em._ivf_assign2_kernel(e, cent_rows).collect()
     }
-    assert kern2 == hof2
-    hof1 = {
-        r["vec_id"]: r["cell"]
-        for r in em._ivf_assign(e, cent_rows).collect()
-    }
+    assert kern2 == want2
+    want1, _ = _fold_assign(vecs, cent_rows, 1)
     kern1 = {
-        r["vec_id"]: r["cell"]
-        for r in em._ivf_assign_kernel(e, cent_rows)
-        .where(F.col("rank") == 0)
-        .collect()
+        (r["vec_id"], r["rank"]): r["cell"]
+        for r in em._ivf_assign_kernel(e, cent_rows).collect()
     }
-    assert kern1 == hof1
+    assert kern1 == want1
     assert len(kern1) == 500
 
 
 def test_assign2_rank0_equals_top1_assign(spark):
     """ann_ivf_topk scans the rank-0 slice of the cached multi-probe
-    assignment instead of re-running the top-1 fold — valid only if
-    assign2's best cell IS _ivf_assign's cell for every vector (same
-    fold, same ascending-cid strict-improvement tie rule)."""
+    assignment instead of re-running the top-1 e-step — valid only if
+    the multi-probe kernel's best cell IS the top-1 kernel's cell for
+    every vector (same cosines, same ascending-cid strict-improvement
+    tie rule)."""
     from pyspark.sql import functions as F
 
     em = entry_mod
@@ -244,11 +256,11 @@ def test_assign2_rank0_equals_top1_assign(spark):
     cent_rows = em._ivf_fit_cached(spark, SF_DIR)
     top1 = {
         r["vec_id"]: r["cell"]
-        for r in em._ivf_assign(e, cent_rows).select("vec_id", "cell").collect()
+        for r in em._ivf_assign_kernel(e, cent_rows).select("vec_id", "cell").collect()
     }
     rank0 = {
         r["vec_id"]: r["cell"]
-        for r in em._ivf_assign2(e, cent_rows)
+        for r in em._ivf_assign2_kernel(e, cent_rows)
         .where(F.col("rank") == 0)
         .select("vec_id", "cell")
         .collect()

@@ -43,29 +43,6 @@ def test_engine_index_matches_oracle(spark, built_index, oracle_index):
         assert engine[t] == oracle[t], f"postings differ for {t!r}"
 
 
-def test_local_and_shuffle_postings_agree(spark, built_index, small_corpus_pdf, tmp_path):
-    """The zero-shuffle per-segment build and the groupBy(term,bucket)
-    build must produce the SAME logical index (same postings, tfs,
-    positions per term in docID order), differing only in physical block
-    granularity."""
-    from searchengine_spark.index.build import IndexBuilder
-
-    out = str(tmp_path / "shuffle_idx")
-    pages = spark.createDataFrame(small_corpus_pdf).repartition(8)
-    IndexBuilder(spark, out, bucket_docs=64, local_postings=False).build(pages)
-    local = _load_engine_index(spark, built_index)  # built with default (local)
-    shuf = _load_engine_index(spark, out)
-    assert set(local) == set(shuf)
-    for t in local:
-        assert local[t] == shuf[t], f"postings differ for {t!r}"
-    # the two paths must also agree on the PHYSICAL parquet schema —
-    # mixed int32/int64 stats columns in one postings dir break the
-    # vectorized reader on resume (ADVICE r2 #2)
-    a = spark.read.parquet(os.path.join(built_index, "postings")).drop("chunk")
-    b = spark.read.parquet(os.path.join(out, "postings")).drop("chunk")
-    assert dict(a.dtypes) == dict(b.dtypes)
-
-
 def test_assign_dense_ids_fast_path_sorted_input(spark, tmp_path):
     """Partition-sorted input (url-sorted parquet, one file per read
     partition) must take the ZERO-SHUFFLE id path: dense ids in global
@@ -182,7 +159,7 @@ def test_docs_table_matches_oracle(spark, built_index, oracle_index):
         assert rows[d]["ld"] == oracle_index.ld[d], f"Ld differs doc {d}"
 
 
-def test_block_invariants(spark, built_index):
+def test_block_invariants(spark, built_index, oracle_index):
     post = spark.read.option(
         "basePath", os.path.join(built_index, "postings")
     ).parquet(os.path.join(built_index, "postings"))
@@ -198,6 +175,13 @@ def test_block_invariants(spark, built_index):
         assert int(tfs.sum()) == r["cf_b"]
         assert r["bucket"] == r["doc_first"] // 64 == r["doc_last"] // 64
         assert abs(r["max_wdt"] - (1.0 + np.log(r["max_tf"]))) < 1e-12
+        # the denormalized per-posting doc lengths and the block-min
+        # norms pruning relies on, against the oracle's per-doc dl / Ld
+        dls = vb_decode(bytes(r["dls_vb"])).astype(int)
+        want_dl = [oracle_index.dl[int(d)] for d in docs]
+        assert list(dls) == want_dl
+        assert r["min_dl"] == min(want_dl)
+        assert r["min_ld"] == min(oracle_index.ld[int(d)] for d in docs)
 
 
 def test_lexicon_df(spark, built_index, oracle_index):
@@ -318,7 +302,8 @@ def test_resume_after_sigkill_mid_build(spark, tmp_path):
     docs_b = sorted(map(tuple, b.docs.select("doc_id", "url", "ld").collect()))
     assert docs_a == docs_b
     # logical lexicon identity: n_blocks is physical (segment splits track
-    # the builder's parallelism — 32-core subprocess vs 4-core clean build)
+    # the builder's parallelism — the subprocess runs Spark's default
+    # local[*], the clean build this session's local[4])
     lex_cols = ["term", "df", "cf", "max_tf", "max_wdt"]
     lex_a = sorted(map(tuple, a.lexicon.select(*lex_cols).collect()))
     lex_b = sorted(map(tuple, b.lexicon.select(*lex_cols).collect()))
@@ -381,30 +366,3 @@ def test_nested_encode_rejects_null_struct_fields():
         with pytest.raises(ValueError, match="null struct field"):
             list(_encode_partition_nested(iter([bad]), 64))
 
-
-def test_nested_encode_identical_to_exploded(spark, small_corpus_pdf, monkeypatch):
-    """The in-kernel-explode postings path (`_encode_partition_nested`,
-    the default) must produce BYTE-identical blocks to the JVM-explode
-    path (`SPARK_GRAFT_ENCODE=exploded`) — same rows, same varbyte
-    blobs, same stats."""
-    from searchengine_spark.index.build import (
-        assign_dense_ids,
-        build_postings_local,
-    )
-    from searchengine_spark.text.udfs import tokenized_docs_arrow
-
-    pages = spark.createDataFrame(small_corpus_pdf)
-    with_ids = assign_dense_ids(
-        pages.select("url", "warc_ts", "lang", "text"), order_col="url", start=0
-    )
-    docs = tokenized_docs_arrow(
-        with_ids.select("doc_id", "url", "warc_ts", "lang", "text"),
-        passthrough=("doc_id", "url", "warc_ts", "lang"),
-    ).localCheckpoint()
-    monkeypatch.setenv("SPARK_GRAFT_ENCODE", "exploded")
-    a = build_postings_local(docs, 64).orderBy("term", "bucket", "doc_first").collect()
-    monkeypatch.delenv("SPARK_GRAFT_ENCODE")
-    b = build_postings_local(docs, 64).orderBy("term", "bucket", "doc_first").collect()
-    assert len(a) == len(b) and len(a) > 0
-    for ra, rb in zip(a, b):
-        assert ra == rb

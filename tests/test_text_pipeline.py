@@ -256,32 +256,40 @@ def _fuzz_texts(seed: int, n: int, ascii_only: bool) -> list:
     return docs
 
 
-def test_tokenize_columnar_identical_to_pandas_kernel():
+def _tokenize_reference(text):
+    """Per-doc (terms, dl, Ld) straight from the pure-Python pipeline:
+    terms in first-occurrence order, positions in occurrence order."""
+    acc: dict[str, list[int]] = {}
+    for term, pos in tokenize_events(text or ""):
+        acc.setdefault(term, []).append(pos)
+    terms = [{"term": t, "tf": len(ps), "positions": ps} for t, ps in acc.items()]
+    dl = sum(len(ps) for ps in acc.values())
+    return terms, dl, doc_ld({t: len(ps) for t, ps in acc.items()})
+
+
+def test_tokenize_columnar_matches_tokenizer_reference():
     """The mapInArrow build kernel (text/udfs._tokenize_batch_columnar)
-    must reproduce the pandas kernel EXACTLY — terms in first-occurrence
-    order, positions in occurrence order, dl, and Ld compared BITWISE
-    (the rank-level fold must replay doc_ld's sequential HashMap-order
-    summation; np.sum/np.add.reduceat are pairwise and would flip low
-    bits). The pandas kernel is itself pinned to the pure-Python path and,
-    through diffcheck, to the compiled Java reference."""
+    must reproduce text/tokenizer EXACTLY — tokenize_events aggregated
+    per doc, dl, and Ld compared BITWISE against doc_ld (the rank-level
+    fold must replay its sequential HashMap-order summation;
+    np.sum/np.add.reduceat are pairwise and would flip low bits). The
+    reference splits with the Python-re Java-whitespace class, so this
+    also pins the kernel's RE2 spelling of it. tokenizer is itself
+    pinned, through diffcheck, to the compiled Java reference."""
     import struct as st
 
-    import pandas as pd
-
-    from searchengine_spark.text.udfs import (
-        _tokenize_batch,
-        _tokenize_batch_columnar,
-    )
+    from searchengine_spark.text.udfs import _tokenize_batch_columnar
 
     for seed in (11, 12):
         for ascii_only in (True, False):
             texts = _fuzz_texts(seed, 250, ascii_only)
-            ref = _tokenize_batch(pd.Series(texts, dtype=object))
             terms, dl, ld = _tokenize_batch_columnar(texts)
-            assert list(ref["dl"]) == list(dl)
-            for x, y in zip(ref["ld"], ld):
-                assert st.pack("<d", x) == st.pack("<d", y)
-            assert list(ref["terms"]) == terms.to_pylist()
+            got_terms = terms.to_pylist()
+            for i, text in enumerate(texts):
+                want_terms, want_dl, want_ld = _tokenize_reference(text)
+                assert got_terms[i] == want_terms, text
+                assert dl[i] == want_dl, text
+                assert st.pack("<d", ld[i]) == st.pack("<d", want_ld), text
 
 
 def test_tokenize_columnar_empty_batch():

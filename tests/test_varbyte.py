@@ -77,7 +77,7 @@ def test_vb_encode_all_segmentation_property():
     """The whole-array encode + per-value byte ends must slice into the
     same bytes as encoding each segment independently — the invariant
     the vectorized postings kernel relies on to carve per-(term,bucket)
-    blobs from one encode (index/build._encode_partition)."""
+    blobs from one encode (index/build._encode_arrays)."""
     import random
 
     import numpy as np
