@@ -592,9 +592,9 @@ def _stage_scaling_corpus(
     import multiprocessing as mp
 
     from searchengine_spark.corpus import generate_pages
-    from searchengine_spark.session import get_spark
+    from searchengine_spark.session import default_cpus, get_spark
 
-    spark = get_spark("scaling-stage", master="local[32]", shuffle_partitions=32)
+    spark = get_spark("scaling-stage")
     pages_dir = tempfile.mkdtemp(prefix="scale_pages_", dir=_SCRATCH)
     warm_dir = tempfile.mkdtemp(prefix="scale_warm_", dir=_SCRATCH)
     enc_dir = tempfile.mkdtemp(prefix="scale_enc_", dir=_SCRATCH)
@@ -613,7 +613,7 @@ def _stage_scaling_corpus(
         spark.stop()
     per = (len(texts) + files - 1) // files
     ctx = mp.get_context("fork")
-    with ctx.Pool(32) as pool:
+    with ctx.Pool(default_cpus()) as pool:
         pool.map(
             _ctl_stage_encode_chunk,
             [

@@ -6,7 +6,8 @@
         --bucket-docs 131072 --chunk-docs 10000000 [--tiered] [--synth N]
 
 On a cluster, size shuffle partitions via --conf spark.sql.shuffle.partitions
-(~2-3x total cores). The build is resumable: re-submitting after a failure
+(~2-3x total cores). Run as plain python, the job uses a local[n] session
+with n = SPARK_GRAFT_CPUS or the usable CPUs (searchengine_spark/session.py). The build is resumable: re-submitting after a failure
 skips committed chunks (per-chunk manifests under <out>/_manifests).
 """
 
@@ -47,16 +48,11 @@ def main() -> None:
     )
     args = ap.parse_args()
 
-    from pyspark.sql import SparkSession
-
     from searchengine_spark.catalog import read_table
     from searchengine_spark.index.build import IndexBuilder
-    from searchengine_spark.session import ENGINE_CONFS
+    from searchengine_spark.session import job_spark
 
-    b = SparkSession.builder.appName("build-index")
-    for k, v in ENGINE_CONFS.items():
-        b = b.config(k, v)
-    spark = b.getOrCreate()
+    spark = job_spark("build-index")
 
     if args.synth:
         from searchengine_spark.corpus import generate_pages

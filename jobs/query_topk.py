@@ -2,7 +2,12 @@
 
     spark-submit --py-files dist/engine.zip jobs/query_topk.py \
         --index /data/index --query "fast data" \
-        [--k 20] [--scorer bm25|tfidf_ref] [--mode full|wand|tiered|boolean]
+        [--k 20] [--scorer bm25|tfidf_ref] \
+        [--mode serve|full|tiered|scored|boolean]
+
+``serve`` (the default) answers with the Spark-free serving tier's exact
+block-max WAND (query/serve.py; comma-separated shard dirs fan out via
+query/sharded.py); ``full`` is Spark full evaluation (query/exec.py).
 """
 
 from __future__ import annotations
@@ -30,8 +35,8 @@ def main() -> None:
     ap.add_argument("--scorer", default="bm25", choices=["bm25", "tfidf_ref"])
     ap.add_argument(
         "--mode",
-        default="wand",
-        choices=["full", "wand", "tiered", "scored", "boolean", "serve"],
+        default="serve",
+        choices=["serve", "full", "tiered", "scored", "boolean"],
     )
     args = ap.parse_args()
 
@@ -49,14 +54,9 @@ def main() -> None:
         print(json.dumps({"results": rows}))
         return
 
-    from pyspark.sql import SparkSession
+    from searchengine_spark.session import job_spark
 
-    from searchengine_spark.session import ENGINE_CONFS
-
-    b = SparkSession.builder.appName("query-topk")
-    for k, v in ENGINE_CONFS.items():
-        b = b.config(k, v)
-    spark = b.getOrCreate()
+    spark = job_spark("query-topk")
 
     if args.mode == "boolean":
         from searchengine_spark.query.boolean import boolean_query
@@ -77,21 +77,12 @@ def main() -> None:
         print(json.dumps([dict(doc_id=r["doc_id"], url=r["url"], score=r["score"]) for r in rows]))
     else:
         from searchengine_spark.query.exec import IndexHandle, ranked_topk
-        from searchengine_spark.query.wand import ranked_topk_wand
 
         idx = IndexHandle(spark, args.index)
-        stats: dict = {}
-        if args.mode == "wand":
-            df = ranked_topk_wand(idx, args.query, k=args.k, scorer=args.scorer, stats=stats)
-        else:
-            df = ranked_topk(idx, args.query, k=args.k, scorer=args.scorer)
-        rows = df.collect()
-        out = {
+        rows = ranked_topk(idx, args.query, k=args.k, scorer=args.scorer).collect()
+        print(json.dumps({
             "results": [dict(doc_id=r["doc_id"], url=r["url"], score=r["score"]) for r in rows],
-        }
-        if stats:
-            out["wand"] = stats
-        print(json.dumps(out))
+        }))
     spark.stop()
 
 

@@ -93,7 +93,7 @@ def page_row(i: int, clustered: bool = False) -> tuple[str, datetime, bytes, str
     supplies ~half the words. Since doc_ids follow url order and urls
     sort by site, topics become CONTIGUOUS doc ranges — heterogeneous
     per-bucket block maxima, the corpus shape where block-max pruning
-    (query/wand.py) actually pays off (the uniform default corpus makes
+    (query/serve.py) actually pays off (the uniform default corpus makes
     every bucket's maxima identical, so WAND degenerates to full
     evaluation there)."""
     rng = np.random.default_rng((SEED, i))

@@ -78,14 +78,12 @@ def variant_matrix(
     import os
     import time
 
-    from .query.exec import ranked_topk
     from .query.serve import LocalIndexReader
     from .query.tiered import (
         TieredIndexHandle,
         scored_ranked_topk,
         tiered_ranked_topk,
     )
-    from .query.wand import ranked_topk_wand
 
     idx = IndexHandle(spark, idx_dir)
     qrels = qrels_from_mode(idx, queries, k=k, scorer="tfidf_ref")
@@ -106,9 +104,6 @@ def variant_matrix(
             "qps": len(queries) / max(el, 1e-9),
         }
 
-    _per_query(
-        "wand_bm25", lambda q: ranked_topk_wand(idx, q, k=k, scorer="bm25").collect()
-    )
     reader = LocalIndexReader(idx_dir)
     _per_query("serve_bm25", lambda q: reader.ranked_topk(q, k=k, scorer="bm25"))
     _per_query("serve_tfidf", lambda q: reader.ranked_topk(q, k=k, scorer="tfidf_ref"))

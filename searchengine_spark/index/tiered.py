@@ -25,7 +25,7 @@ hard-capped by ``spark.executor.pyspark.memory`` (~40 B/posting peak —
 At 10^9+ postings/term the single sequential task remains the declared
 floor — tiered mode exists for rank-identity with the reference's
 ACTIVE configuration; the 10^12-doc serving path is block-max WAND over
-the flat index (query/wand.py), whose pruning is exact rather than the
+the flat index (query/serve.py), whose pruning is exact rather than the
 tier heuristic's lossy fall-through.
 """
 
@@ -40,6 +40,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..query import scoring
 from .build import _encode_block
 from .javapq import (
     assign_tiers,
@@ -138,7 +139,7 @@ def _label_scored_one(n_docs: float):
 
     def one(term, docs: np.ndarray, tfs: np.ndarray) -> dict:
         df = float(len(docs))
-        wqt = _math.log(1.0 + n_docs / df)
+        wqt = scoring.wqt("tfidf_ref", n_docs, df)
         # per-distinct-tf wdt table with math.log (np.log is a different
         # polynomial — CLAUDE.md); scores stay bit-equal to the scalar
         # (1+math.log(tf))*wqt the reference computes per posting
@@ -190,7 +191,7 @@ def _label_scored_fn(pdf: pd.DataFrame, n_docs: float) -> pd.DataFrame:
     out = []
     for term, g in pdf.groupby("term", sort=False):
         df = float(len(g))
-        wqt = _math.log(1.0 + n_docs / df)
+        wqt = scoring.wqt("tfidf_ref", n_docs, df)
         tfs = g["tf"].to_numpy()
         scores = [(1.0 + _math.log(int(tf))) * wqt for tf in tfs]
         tiers = assign_tiers_scored(g["doc_id"].tolist(), scores)

@@ -17,7 +17,8 @@ from dataclasses import dataclass, field
 
 import pandas as pd
 
-from ..query.exec import BM25_B, BM25_K1, expand_ranked_query
+from ..query.exec import expand_ranked_query
+from ..query.scoring import BM25_B, BM25_K1
 from ..text.tokenizer import build_positional_index
 
 

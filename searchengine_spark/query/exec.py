@@ -4,12 +4,10 @@ Spark shape (§3.2): tiny broadcast dim (query-term weights) ⋈ bucket/
 rowgroup-pruned postings scan → Arrow-UDF block decode → JVM aggregation
 → top-k via ORDER BY ... LIMIT k (TakeOrderedAndProject — no full sort).
 
-Two scorers on one index (SURVEY §2.6 note):
-  - ``tfidf_ref``: the reference's lnc tf-idf, float64 natural log —
-    score(d) = Σ_t (1+ln tf)·ln(1+N/df) / Ld(d)
-    (RankedQueryParser.java:82-94,119-132). Rank-identity gate.
-  - ``bm25`` (k1=1.2, b=0.75): the north-star web-scale scorer.
-    idf = ln((N-df+0.5)/(df+0.5)+1), dl = Σ tf, avgdl from build meta.
+Two scorers on one index, both defined once in query/scoring.py:
+``tfidf_ref`` (the reference's lnc tf-idf, the rank-identity gate) and
+``bm25`` (the north-star web-scale scorer; dl = Σ tf, avgdl from build
+meta).
 
 Tie-break: (score DESC, doc_id ASC) — the reference's heap leaves equal
 scores unordered (RankedQueryParser.java:42-52), so we pin doc_id order
@@ -19,7 +17,6 @@ and the oracle mirrors it (SURVEY §2.5 K4).
 from __future__ import annotations
 
 import json
-import math
 import os
 from collections import Counter
 from dataclasses import dataclass
@@ -32,9 +29,7 @@ from pyspark.sql import functions as F
 from ..index.varbyte import decode_sorted, vb_decode
 from ..text.porter import porter_stem
 from ..text.tokenizer import remove_apostrophes, strip_for_query
-
-BM25_K1 = 1.2
-BM25_B = 0.75
+from . import scoring
 
 
 def expand_ranked_query(query: str) -> list[str]:
@@ -94,10 +89,10 @@ class IndexHandle:
         interactive planners' analogue of the serving tier's RAM lexicon
         (serve.py term_stats), but lazy: each distinct term is fetched once
         (misses memoize as df=0) and never costs a Spark job. Repeated
-        queries — the batch harness, bench reps, a WAND upper-bound probe
-        after a planner probe — are pure dict hits. Falls back to a Spark
-        collect when the index path isn't pyarrow-readable (e.g. a remote
-        URI with no local filesystem mapping)."""
+        queries — the batch harness, bench reps — are pure dict hits.
+        Falls back to a Spark collect when the index path isn't
+        pyarrow-readable (e.g. a remote URI with no local filesystem
+        mapping)."""
         todo = sorted({t for t in terms if t not in self._df_memo})
         if todo:
             found: dict[str, int] = {}
@@ -238,30 +233,6 @@ def decoded_postings_with_positions(
     )
 
 
-def query_weights(
-    idx: IndexHandle, terms: list[str], scorer: str
-) -> list[tuple[str, float]]:
-    """Per-term wqt, multiplied by query-term multiplicity."""
-    n = float(self_n(idx))
-    mult = Counter(terms)
-    dfs = idx.term_dfs(list(mult))
-    out = []
-    for term in sorted(dfs):  # term order, matching the lexicon's sort
-        df = float(dfs[term])
-        if scorer == "tfidf_ref":
-            wqt = math.log(1.0 + n / df)
-        elif scorer == "bm25":
-            wqt = math.log((n - df + 0.5) / (df + 0.5) + 1.0)
-        else:
-            raise ValueError(scorer)
-        out.append((term, wqt * mult[term]))
-    return out
-
-
-def self_n(idx: IndexHandle) -> int:
-    return int(idx.meta["n_docs"])
-
-
 def ranked_topk(
     idx: IndexHandle,
     query: str,
@@ -271,36 +242,26 @@ def ranked_topk(
     """Full-evaluation ranked retrieval → DataFrame
     (doc_id, url, score) with deterministic (score desc, doc_id asc) top-k."""
     spark = idx.spark
-    terms = expand_ranked_query(query)
-    if not terms:
+    mult = Counter(expand_ranked_query(query))
+    dfs = idx.term_dfs(list(mult))
+    if not dfs:
         return spark.createDataFrame([], "doc_id long, url string, score double")
-    qw = query_weights(idx, terms, scorer)
-    if not qw:
-        return spark.createDataFrame([], "doc_id long, url string, score double")
-    qw_df = F.broadcast(
-        spark.createDataFrame(qw, "term string, wqt double")
+    n = float(idx.meta["n_docs"])
+    # term order, matching the lexicon's sort
+    qw = [(t, scoring.wqt(scorer, n, dfs[t], mult[t])) for t in sorted(dfs)]
+    qw_df = F.broadcast(spark.createDataFrame(qw, "term string, wqt double"))
+    partial = F.col("wqt") * scoring.tf_part_col(scorer, float(idx.meta["avgdl"]))
+    # bm25's dl rides the decoded posting: no docs join on candidates
+    scored = (
+        decoded_postings(idx, [t for t, _ in qw])
+        .join(qw_df, "term")
+        .select("doc_id", partial.alias("partial"))
+        .groupBy("doc_id")
+        .agg(F.sum("partial").alias("score"))
     )
-    cand = decoded_postings(idx, [t for t, _ in qw]).join(qw_df, "term")
-    if scorer == "tfidf_ref":
-        partial = (F.lit(1.0) + F.log(F.col("tf").cast("double"))) * F.col("wqt")
-        scored = (
-            cand.select("doc_id", partial.alias("partial"))
-            .groupBy("doc_id")
-            .agg(F.sum("partial").alias("acc"))
-            .join(idx.docs.select("doc_id", "ld"), "doc_id")
-            .select("doc_id", (F.col("acc") / F.col("ld")).alias("score"))
-        )
-    else:  # bm25 — dl rides the decoded posting; no docs join on candidates
-        avgdl = float(idx.meta["avgdl"])
-        tf = F.col("tf").cast("double")
-        norm = F.lit(BM25_K1) * (
-            F.lit(1.0 - BM25_B) + F.lit(BM25_B) * F.col("dl") / F.lit(avgdl)
-        )
-        partial = F.col("wqt") * tf * F.lit(BM25_K1 + 1.0) / (tf + norm)
-        scored = (
-            cand.select("doc_id", partial.alias("partial"))
-            .groupBy("doc_id")
-            .agg(F.sum("partial").alias("score"))
+    if scorer == "tfidf_ref":  # lnc: each doc's sum over its Ld
+        scored = scored.join(idx.docs.select("doc_id", "ld"), "doc_id").select(
+            "doc_id", (F.col("score") / F.col("ld")).alias("score")
         )
     topk = scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
     # only the ≤k winners fetch doc metadata
@@ -324,7 +285,6 @@ def _bm25_bucket_topk_kernel(qweights, avgdl: float, bucket_docs: int, k: int):
     order; accumulation iterates blocks in sorted-term order so each
     query's per-doc sum folds in a fixed term order (float-order stable
     across runs)."""
-    K1, B = BM25_K1, BM25_B
 
     def score_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
         order = np.argsort(pdf["term"].to_numpy(), kind="stable")
@@ -341,7 +301,7 @@ def _bm25_bucket_topk_kernel(qweights, avgdl: float, bucket_docs: int, k: int):
             docs = decode_sorted(bytes(dvbs[i]))
             tf = vb_decode(bytes(tvbs[i])).astype(np.float64)
             dl = vb_decode(bytes(lvbs[i])).astype(np.float64)
-            contrib = tf * (K1 + 1.0) / (tf + K1 * (1.0 - B + B * dl / avgdl))
+            contrib = scoring.tf_part("bm25", tf, dl, avgdl)
             local = docs - base
             for qid, w in users:
                 arr = acc.get(qid)
@@ -383,104 +343,66 @@ def ranked_topk_batch(
     queries: list[tuple[int, str]],
     k: int = 20,
     scorer: str = "tfidf_ref",
-    impl: str | None = None,
 ) -> DataFrame:
     """Evaluate MANY ranked queries in ONE Spark job (the analogue of the
     reference's batch harness, Milestone3/SimulateQueryRun.java:33-87, and
-    the throughput-bench path): queries become a small broadcast dim
-    (qid, term, wqt), postings for the union of terms are decoded once,
-    scores aggregate per (qid, doc_id), and a per-qid window takes top-k.
+    the throughput-bench path) → (qid, rank, doc_id, url, score) rows, the
+    exact top-k per qid. One bucket-pruned scan serves every query; the
+    final window partitions by qid, never by term, so stopword skew can't
+    concentrate in one task. The scorer picks the plan:
 
-    Scale shape: one bucket-pruned scan regardless of query count; the
-    window partitions by qid (thousands of tiny partitions), never by
-    term, so stopword skew can't concentrate in one task.
+      * bm25 — scatter-gather kernel: encoded blocks shuffle once by
+        bucket (each block crosses the wire once no matter how many
+        queries share its term), one Arrow kernel per bucket scores every
+        query numpy-side and emits ≤k rows per query, and a window over
+        ≤ k·queries·buckets tiny rows takes the global top-k — the same
+        shape the sharded serving root uses across shards.
+      * tfidf_ref — declarative exchange: queries become a small
+        broadcast dim (qid, term, wqt), decoded postings join it, scores
+        aggregate per (qid, doc_id) and divide by Ld from the docs dim."""
+    from pyspark.sql.window import Window
 
-    ``impl``: None (auto) picks the scatter-gather KERNEL path for bm25 —
-    encoded blocks shuffle once by bucket (each block crosses the wire
-    once no matter how many queries share its term, vs one candidate row
-    per (query, posting) in the exchange path), one Arrow kernel per
-    bucket scores every query numpy-side and emits ≤k rows per query, and
-    a window over ≤ k·queries·buckets tiny rows takes the exact global
-    top-k — the same scatter-gather shape the sharded serving root uses
-    across shards. "exchange" forces the declarative candidate-row path
-    (the tfidf_ref parity scorer always uses it: its ÷Ld needs the docs
-    dim, which rides the exchange plan's broadcast join)."""
     spark = idx.spark
-    n = float(self_n(idx))
-    per_q: dict[int, Counter] = {qid: Counter(expand_ranked_query(q)) for qid, q in queries}
-    all_terms = sorted({t for c in per_q.values() for t in c})
-    if not all_terms:
-        return spark.createDataFrame(
-            [], "qid int, rank int, doc_id long, url string, score double"
-        )
-    dfs = {t: float(df) for t, df in idx.term_dfs(all_terms).items()}
-    rows = []
-    for qid, cnt in per_q.items():
-        for t, mult in cnt.items():
-            df = dfs.get(t)
-            if not df:
-                continue
-            if scorer == "tfidf_ref":
-                wqt = math.log(1.0 + n / df)
-            else:
-                wqt = math.log((n - df + 0.5) / (df + 0.5) + 1.0)
-            rows.append((qid, t, wqt * mult))
+    n = float(idx.meta["n_docs"])
+    per_q = {qid: Counter(expand_ranked_query(q)) for qid, q in queries}
+    dfs = idx.term_dfs(sorted({t for c in per_q.values() for t in c}))
+    rows = [
+        (qid, t, scoring.wqt(scorer, n, dfs[t], mult))
+        for qid, cnt in per_q.items()
+        for t, mult in cnt.items()
+        if t in dfs
+    ]
     if not rows:
         return spark.createDataFrame(
             [], "qid int, rank int, doc_id long, url string, score double"
         )
-    from pyspark.sql.window import Window
-
-    if impl is None:
-        impl = "kernel" if scorer == "bm25" else "exchange"
-    if impl == "kernel":
-        if scorer != "bm25":
-            raise ValueError("kernel batch path is bm25-only (tfidf needs Ld)")
+    live_terms = sorted({t for _, t, _ in rows})
+    if scorer == "bm25":
         qweights: dict[str, list[tuple[int, float]]] = {}
         for qid, t, w in sorted(rows):
             qweights.setdefault(t, []).append((qid, w))
-        live_terms = sorted(qweights)
-        avgdl = float(idx.meta["avgdl"])
-        bucket_docs = int(idx.meta["bucket_docs"])
         blocks = idx.postings.filter(
             F.col("term").isin(live_terms)
         ).select("bucket", "term", "docs_vb", "tfs_vb", "dls_vb")
-        per_bucket = blocks.groupBy("bucket").applyInPandas(
-            _bm25_bucket_topk_kernel(qweights, avgdl, bucket_docs, k),
+        scored = blocks.groupBy("bucket").applyInPandas(
+            _bm25_bucket_topk_kernel(
+                qweights, float(idx.meta["avgdl"]), int(idx.meta["bucket_docs"]), k
+            ),
             schema="qid int, doc_id long, score double",
         )
-        w = Window.partitionBy("qid").orderBy(F.desc("score"), F.asc("doc_id"))
-        ranked = (
-            per_bucket.withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= k)
+    else:
+        qdim = F.broadcast(
+            spark.createDataFrame(rows, "qid int, term string, wqt double")
         )
-        return ranked.join(idx.docs.select("doc_id", "url"), "doc_id").select(
-            "qid", "rank", "doc_id", "url", "score"
-        )
-
-    qdim = F.broadcast(spark.createDataFrame(rows, "qid int, term string, wqt double"))
-    live_terms = sorted({t for _, t, _ in rows})
-    cand = decoded_postings(idx, live_terms).join(qdim, "term")
-    if scorer == "tfidf_ref":
-        partial = (F.lit(1.0) + F.log(F.col("tf").cast("double"))) * F.col("wqt")
+        partial = F.col("wqt") * scoring.tf_part_col(scorer)
         scored = (
-            cand.select("qid", "doc_id", partial.alias("partial"))
+            decoded_postings(idx, live_terms)
+            .join(qdim, "term")
+            .select("qid", "doc_id", partial.alias("partial"))
             .groupBy("qid", "doc_id")
             .agg(F.sum("partial").alias("acc"))
             .join(idx.docs.select("doc_id", "ld"), "doc_id")
             .select("qid", "doc_id", (F.col("acc") / F.col("ld")).alias("score"))
-        )
-    else:  # bm25: dl is decoded with the posting — no docs join on candidates
-        avgdl = float(idx.meta["avgdl"])
-        tf = F.col("tf").cast("double")
-        norm = F.lit(BM25_K1) * (
-            F.lit(1.0 - BM25_B) + F.lit(BM25_B) * F.col("dl") / F.lit(avgdl)
-        )
-        partial = F.col("wqt") * tf * F.lit(BM25_K1 + 1.0) / (tf + norm)
-        scored = (
-            cand.select("qid", "doc_id", partial.alias("partial"))
-            .groupBy("qid", "doc_id")
-            .agg(F.sum("partial").alias("score"))
         )
     w = Window.partitionBy("qid").orderBy(F.desc("score"), F.asc("doc_id"))
     ranked = (

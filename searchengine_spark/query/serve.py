@@ -23,7 +23,6 @@ shard; sharding = the same bucket ranges the index is partitioned by.
 from __future__ import annotations
 
 import json
-import math
 import os
 import threading
 from collections import Counter
@@ -34,7 +33,8 @@ import pyarrow.compute as pc
 import pyarrow.dataset as ds
 
 from ..index.varbyte import decode_position_lists, decode_sorted, vb_decode
-from .exec import BM25_B, BM25_K1, expand_ranked_query
+from . import scoring
+from .exec import expand_ranked_query
 
 
 class LocalIndexReader:
@@ -216,8 +216,7 @@ class LocalIndexReader:
     def _block_stats(self, terms: list[str]) -> dict[str, tuple]:
         """Per-term block-max metadata — stats columns only, the posting
         blobs stay on disk (parquet column pruning), cached per term in
-        RAM. This is the serving-tier analogue of query/wand.py's UB
-        scan; the same ``max_tf``/``min_dl``/``min_ld`` written by
+        RAM: the ``max_tf``/``min_dl``/``min_ld`` written by
         index/build.py. Returns term → (buckets, max_tf, min_dl, min_ld)
         numpy arrays."""
         missing = [t for t in terms if t not in self._stats_cache]
@@ -416,37 +415,58 @@ class LocalIndexReader:
         decoded: list[tuple],
         wqt: dict[str, float],
         scorer: str,
-        avgdl: float | None = None,
+        avgdl: float,
     ) -> tuple[np.ndarray, np.ndarray]:
         """(uniq_doc_ids, scores) for the decoded per-term posting arrays.
         Scores are EXACT — the same term-major accumulation order as the
         unpruned path, so pruned and full evaluation are bit-identical.
-        ``avgdl`` overrides the shard-local value (sharded serving passes
-        the GLOBAL average document length)."""
+        ``avgdl`` is the shard-local value, or the GLOBAL one under
+        sharded serving."""
         docs_cat = np.concatenate([d for _, d, _, _ in decoded])
         uniq, inv = np.unique(docs_cat, return_inverse=True)
         # one buffered bincount beats per-term np.add.at (unbuffered
-        # scatter) by ~10x on stopword-sized candidate sets
+        # scatter) by ~10x on stopword-sized candidate sets; bm25 reads dl
+        # decoded alongside the posting — no docs scan at all
+        partials = np.concatenate(
+            [
+                wqt[term] * scoring.tf_part(scorer, tf, dl, avgdl)
+                for term, _, tf, dl in decoded
+            ]
+        )
+        scores = np.bincount(inv, weights=partials, minlength=uniq.size)
         if scorer == "tfidf_ref":
-            partials = np.concatenate(
-                [(1.0 + np.log(tf)) * wqt[term] for term, _, tf, _ in decoded]
-            )
-            acc = np.bincount(inv, weights=partials, minlength=uniq.size)
-            scores = acc / self._doc_norms("ld", uniq)
-        else:  # bm25: dl decoded alongside the posting — no docs scan at all
-            if avgdl is None:
-                avgdl = float(self.meta["avgdl"])
-            partials = np.concatenate(
-                [
-                    wqt[term]
-                    * tf
-                    * (BM25_K1 + 1.0)
-                    / (tf + BM25_K1 * (1.0 - BM25_B + BM25_B * dl / avgdl))
-                    for term, _, tf, dl in decoded
-                ]
-            )
-            scores = np.bincount(inv, weights=partials, minlength=uniq.size)
+            scores = scores / self._doc_norms("ld", uniq)
         return uniq, scores
+
+    def _bucket_bounds(
+        self, terms_sorted: list[str], wqt: dict[str, float], scorer: str, avgdl: float
+    ) -> tuple[np.ndarray, np.ndarray, dict[str, list[int]]]:
+        """(buckets, UB per bucket, term → its buckets) from the block-max
+        stats (RAM-cached per term). UB(bucket) = Σ_t wqt_t·tf_part at the
+        block extrema, over the same float ops as ``_score_decoded`` — for
+        tfidf_ref the Σ is divided by the least Ld among the bucket's
+        blocks — so it bounds every doc score in the bucket."""
+        by_term = self._block_stats(terms_sorted)
+        parts = [(t, *by_term[t]) for t in terms_sorted if by_term[t][0].size]
+        if not parts:
+            return np.empty(0, np.int64), np.empty(0), {}
+        st_bucket = np.concatenate([p[1] for p in parts])
+        max_tf = np.concatenate([p[2] for p in parts])
+        min_dl = np.concatenate([p[3] for p in parts])
+        wqt_row = np.concatenate([np.full(p[1].size, wqt[p[0]]) for p in parts])
+        # sorted+deduped: a (term,bucket) can span several physical block
+        # rows — the UB sum then counts that term's contribution once per
+        # row (still a valid upper bound) but decode must touch the
+        # logical bucket exactly once
+        term_buckets = {p[0]: sorted({int(b) for b in p[1]}) for p in parts}
+        ub_bucket, binv = np.unique(st_bucket, return_inverse=True)
+        contrib = wqt_row * scoring.tf_part(scorer, max_tf, min_dl, avgdl)
+        ub = np.bincount(binv, weights=contrib, minlength=ub_bucket.size)
+        if scorer == "tfidf_ref":
+            ld_min = np.full(ub_bucket.size, np.inf)
+            np.minimum.at(ld_min, binv, np.concatenate([p[4] for p in parts]))
+            ub = ub / ld_min
+        return ub_bucket, ub, term_buckets
 
     # -- ranked ------------------------------------------------------------
     def ranked_topk(
@@ -461,7 +481,7 @@ class LocalIndexReader:
     ) -> list[dict]:
         """Block-max pruned top-k (exact; identical to full evaluation).
 
-        Same pruning math as query/wand.py, single-threaded over numpy:
+        Bucket-grained block-max WAND over numpy:
         UB(bucket) = Σ_t wqt_t·maxcontrib_t(bucket) bounds every doc score
         in the bucket, so buckets with UB < θ (k-th best score from the
         ``probe`` most-promising buckets) never need their blobs read or
@@ -488,52 +508,16 @@ class LocalIndexReader:
             dfs = {t: g_dfs[t] for t in mult if g_dfs.get(t)}
         if not dfs:
             return []
-        wqt = {}
-        for t, df in dfs.items():
-            df = float(df)
-            if scorer == "tfidf_ref":
-                wqt[t] = math.log(1.0 + n / df) * mult[t]
-            else:
-                wqt[t] = math.log((n - df + 0.5) / (df + 0.5) + 1.0) * mult[t]
+        wqt = {t: scoring.wqt(scorer, n, df, mult[t]) for t, df in dfs.items()}
         terms_sorted = sorted(wqt)
-
-        # block-max stats (RAM-cached per term): bucket/max_tf/min_dl/min_ld
-        by_term = self._block_stats(terms_sorted)
-        parts = [
-            (t, *by_term[t]) for t in terms_sorted if by_term[t][0].size
-        ]
-        if not parts:
-            return []
-        st_bucket = np.concatenate([p[1] for p in parts])
-        max_tf = np.concatenate([p[2] for p in parts])
-        min_dl = np.concatenate([p[3] for p in parts])
-        min_ld = np.concatenate([p[4] for p in parts])
-        wqt_row = np.concatenate(
-            [np.full(p[1].size, wqt[p[0]]) for p in parts]
+        ub_bucket, ub, term_buckets = self._bucket_bounds(
+            terms_sorted, wqt, scorer, avgdl_v
         )
-        # sorted+deduped: a (term,bucket) can span several physical block
-        # rows — the UB sum then counts that term's contribution once per
-        # row (still a valid upper bound) but decode must touch the
-        # logical bucket exactly once
-        term_buckets: dict[str, list[int]] = {
-            p[0]: sorted({int(b) for b in p[1]}) for p in parts
-        }
-
-        ub_bucket, binv = np.unique(st_bucket, return_inverse=True)
-        if scorer == "tfidf_ref":
-            contrib = wqt_row * (1.0 + np.log(max_tf))
-            acc = np.bincount(binv, weights=contrib, minlength=ub_bucket.size)
-            ld_min = np.full(ub_bucket.size, np.inf)
-            np.minimum.at(ld_min, binv, min_ld)
-            ub = acc / ld_min
-        else:
-            norm = BM25_K1 * (1.0 - BM25_B + BM25_B * min_dl / avgdl_v)
-            contrib = wqt_row * max_tf * (BM25_K1 + 1.0) / (max_tf + norm)
-            ub = np.bincount(binv, weights=contrib, minlength=ub_bucket.size)
+        if not ub_bucket.size:
+            return []
 
         if not prune or ub_bucket.size <= probe:
-            tb = {t: bs for t, bs in term_buckets.items()}
-            decoded = self._decoded_terms(terms_sorted, tb)
+            decoded = self._decoded_terms(terms_sorted, term_buckets)
             if not decoded:
                 return []
             uniq, scores = self._score_decoded(decoded, wqt, scorer, avgdl_v)

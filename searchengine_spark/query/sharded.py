@@ -38,11 +38,13 @@ architecture a 10^12-doc corpus forces.
 
 from __future__ import annotations
 
+from collections import Counter
 from concurrent.futures import ThreadPoolExecutor
 
 import numpy as np
 
-from .exec import BM25_B, BM25_K1
+from . import scoring
+from .exec import expand_ranked_query
 from .serve import LocalIndexReader
 
 
@@ -59,11 +61,9 @@ def _shard_ub(
     for t, (bkt, max_tf, min_dl, min_ld) in by_term.items():
         if not bkt.size:
             continue
+        contrib = wqt[t] * scoring.tf_part(scorer, max_tf, min_dl, avgdl)
         if scorer == "tfidf_ref":
-            contrib = wqt[t] * (1.0 + np.log(max_tf)) / min_ld
-        else:
-            norm = BM25_K1 * (1.0 - BM25_B + BM25_B * min_dl / avgdl)
-            contrib = wqt[t] * max_tf * (BM25_K1 + 1.0) / (max_tf + norm)
+            contrib = contrib / min_ld
         total += float(contrib.max())
     return total
 
@@ -133,30 +133,13 @@ class ShardedIndexReader:
         the few shards that can matter — the distributed analogue of
         the bucket-level pruning inside each shard. Exactness is
         asserted shard_prune=True ≡ False ≡ single index in tests."""
-        import math as _math
-
-        from collections import Counter
-
-        from .exec import expand_ranked_query
-
-        terms = expand_ranked_query(query)
-        if not terms:
-            return []
-        mult = Counter(terms)
+        mult = Counter(expand_ranked_query(query))
         dfs = self.term_stats(sorted(mult))
         if not dfs:
             return []
         ext = (self.n_docs, self.avgdl, dfs)
         n = float(self.n_docs)
-        wqt = {}
-        for t, df in dfs.items():
-            dff = float(df)
-            if scorer == "tfidf_ref":
-                wqt[t] = _math.log(1.0 + n / dff) * mult[t]
-            else:
-                wqt[t] = (
-                    _math.log((n - dff + 0.5) / (dff + 0.5) + 1.0) * mult[t]
-                )
+        wqt = {t: scoring.wqt(scorer, n, df, mult[t]) for t, df in dfs.items()}
 
         order = list(range(len(self.shards)))
         ubs = None

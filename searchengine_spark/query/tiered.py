@@ -9,8 +9,9 @@ Semantics replayed exactly:
   * wdt recomputed as 1+ln(tf) (``:86``), accumulate, divide by Ld
   * this early termination is LOSSY by design — docs whose postings sit
     in an unfetched tier are simply not scored; rank-identity is against
-    the same truncation, which is why the exact-pruning WAND path
-    (query/wand.py) is the headline serving mode and this one is parity.
+    the same truncation, which is why the exact block-max WAND of the
+    serving tier (query/serve.py) is the headline mode and this one is
+    parity.
 
 Driver does one small lexicon_tiered probe to pick (term, tier) pairs,
 then ONE Spark job scores them (broadcast weights ⋈ tier/bucket-pruned
@@ -23,6 +24,7 @@ from collections import Counter
 
 from pyspark.sql import DataFrame, functions as F
 
+from . import scoring
 from .exec import IndexHandle, _decode_blocks_plain, expand_ranked_query
 
 RETRIEVE_K = 20  # TieredRankedQueryParser.java:147
@@ -75,8 +77,6 @@ def tiered_ranked_topk(
     if not terms:
         return spark.createDataFrame([], schema)
     mult = Counter(terms)
-    import math
-
     n = float(idx.meta["n_docs"])
     lex = (
         idx.lexicon_tiered.filter(F.col("term").isin(sorted(mult)))
@@ -95,7 +95,7 @@ def tiered_ranked_topk(
         if not tiers:
             continue
         pairs.extend((t, tr) for tr in tiers)
-        weights.append((t, math.log(1.0 + n / float(df_total[t])) * c))
+        weights.append((t, scoring.wqt("tfidf_ref", n, df_total[t], c)))
     if not pairs:
         return spark.createDataFrame([], schema)
     pair_dim = F.broadcast(
@@ -108,7 +108,7 @@ def tiered_ranked_topk(
         _decode_blocks_plain, schema="term string, doc_id long, tf long"
     )
     qw_df = F.broadcast(spark.createDataFrame(weights, "term string, wqt double"))
-    partial = (F.lit(1.0) + F.log(F.col("tf").cast("double"))) * F.col("wqt")
+    partial = F.col("wqt") * scoring.tf_part_col("tfidf_ref")
     scored = (
         decoded.join(qw_df, "term")
         .select("doc_id", partial.alias("partial"))

@@ -63,3 +63,23 @@ def get_spark(
     for k, v in (extra or {}).items():
         b = b.config(k, v)
     return b.getOrCreate()
+
+
+def job_spark(app: str) -> SparkSession:
+    """Session for a ``jobs/`` entry point. Under ``spark-submit`` (its JVM
+    gateway is announced in ``PYSPARK_GATEWAY_PORT``) the submitted master
+    and ``--conf`` values stand and ENGINE_CONFS fill only the keys the
+    submission left unset; a plain-python run gets ``get_spark``'s
+    host-sized ``local[n]`` session, so ``SPARK_GRAFT_CPUS`` applies."""
+    if "PYSPARK_GATEWAY_PORT" not in os.environ:
+        return get_spark(app)
+    from pyspark import SparkConf, SparkContext
+
+    # attach to spark-submit's JVM first, so SparkConf() loads the
+    # submitted spark.* properties
+    SparkContext._ensure_initialized()
+    conf = SparkConf()
+    conf.setIfMissing("spark.app.name", app)
+    for k, v in ENGINE_CONFS.items():
+        conf.setIfMissing(k, v)
+    return SparkSession.builder.config(conf=conf).getOrCreate()

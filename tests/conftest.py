@@ -41,3 +41,16 @@ def built_index(spark, small_corpus_pdf, tmp_path_factory):
     stats = b.build(pages)
     assert stats["n_docs"] == 300
     return out
+
+
+@pytest.fixture(scope="session")
+def clustered_index(spark, tmp_path_factory):
+    """Topic-clustered 2000-page index with 128-doc buckets: per-bucket
+    block maxima differ, so block-max pruning has buckets to skip."""
+    from searchengine_spark.corpus import generate_pages
+    from searchengine_spark.index.build import IndexBuilder
+
+    out = str(tmp_path_factory.mktemp("clustered_idx"))
+    pages = generate_pages(spark, 2000, parallelism=8, clustered=True)
+    IndexBuilder(spark, out, bucket_docs=128).build(pages)
+    return out

@@ -45,7 +45,9 @@ def test_variant_matrix(spark, built_index):
     m = variant_matrix(spark, built_index, queries, k=10)
     assert abs(m["full_tfidf"]["map"] - 1.0) < 1e-12
     assert abs(m["serve_tfidf"]["map"] - 1.0) < 1e-12  # serving ≡ Spark path
-    assert m["wand_bm25"]["map"] == m["full_bm25"]["map"]  # exact pruning
+    # the serving tier's block-max pruning is exact: same bm25 top-k as
+    # Spark full evaluation
+    assert abs(m["serve_bm25"]["map"] - m["full_bm25"]["map"]) < 1e-12
     for name in ("full_bm25", "tiered_tfidf", "scored_tfidf"):
         assert 0.0 < m[name]["map"] <= 1.0, (name, m[name])
 

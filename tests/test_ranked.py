@@ -64,16 +64,20 @@ def test_topk_is_take_ordered(handle):
 
 def test_batch_kernel_matches_exchange_bm25(handle):
     """The scatter-gather bucket-kernel batch path must reproduce the
-    declarative exchange plan exactly: same (qid, rank, doc_id) and scores
-    within float-reassociation tolerance (the two paths fold each doc's
-    per-term partials in different orders)."""
+    declarative exchange plan (per-query `ranked_topk`: postings join the
+    query weights, aggregate per doc) exactly: same (qid, rank, doc_id) and
+    scores within float-reassociation tolerance (the two paths fold each
+    doc's per-term partials in different orders)."""
     from searchengine_spark.query.exec import ranked_topk_batch
 
     qs = list(enumerate(QUERIES))
-    a = ranked_topk_batch(handle, qs, k=20, scorer="bm25", impl="kernel").collect()
-    b = ranked_topk_batch(handle, qs, k=20, scorer="bm25", impl="exchange").collect()
+    a = ranked_topk_batch(handle, qs, k=20, scorer="bm25").collect()
     ka = sorted((r["qid"], r["rank"], r["doc_id"], r["score"]) for r in a)
-    kb = sorted((r["qid"], r["rank"], r["doc_id"], r["score"]) for r in b)
+    kb = []
+    for qid, q in qs:
+        rows = ranked_topk(handle, q, k=20, scorer="bm25").collect()
+        kb += [(qid, i + 1, r["doc_id"], r["score"]) for i, r in enumerate(rows)]
+    kb.sort()
     assert len(ka) == len(kb)
     for x, y in zip(ka, kb):
         assert x[:3] == y[:3]
@@ -81,10 +85,12 @@ def test_batch_kernel_matches_exchange_bm25(handle):
 
 
 def test_batch_kernel_matches_oracle_bm25(handle, oracle_index):
+    """The bm25 batch path (scatter-gather bucket kernel) must match the
+    oracle on every query, evaluated together in one batch."""
     from searchengine_spark.query.exec import ranked_topk_batch
 
-    qs = [(0, "fast data"), (1, "the the"), (2, "merge sort join hash scan filter group order")]
-    batch = ranked_topk_batch(handle, qs, k=20, scorer="bm25", impl="kernel").collect()
+    qs = list(enumerate(QUERIES))
+    batch = ranked_topk_batch(handle, qs, k=20, scorer="bm25").collect()
     by_qid = {}
     for r in batch:
         by_qid.setdefault(r["qid"], []).append((r["rank"], r["doc_id"], r["score"]))

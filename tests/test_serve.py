@@ -146,17 +146,13 @@ def test_serve_concurrent_clients_exact(built_index, oracle_index):
     assert len(tiny._block_cache) <= 3
 
 
-def test_serve_prunes_on_clustered_corpus(spark, tmp_path):
+def test_serve_prunes_on_clustered_corpus(clustered_index):
     """On a topic-clustered corpus the serving tier must skip a substantial
-    fraction of buckets (blobs never read) and stay exact — the numpy port
-    of query/wand.py's bucket-grained block-max pruning."""
-    from searchengine_spark.corpus import generate_pages, topic_terms
-    from searchengine_spark.index.build import IndexBuilder
+    fraction of buckets (blobs never read) and stay bit-identical to its
+    own unpruned evaluation."""
+    from searchengine_spark.corpus import topic_terms
 
-    out = str(tmp_path / "clustered_idx")
-    pages = generate_pages(spark, 2000, parallelism=8, clustered=True)
-    IndexBuilder(spark, out, bucket_docs=128).build(pages)
-    r = LocalIndexReader(out)
+    r = LocalIndexReader(clustered_index)
     q = " ".join(topic_terms(5, 3))
     stats: dict = {}
     got = [

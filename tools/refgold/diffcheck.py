@@ -61,6 +61,11 @@ _WORDS = (
 def compile_ref() -> None:
     if os.path.exists(f"{BIN}/GoldGen.class"):
         return
+    if not os.path.isdir(f"{REF}/src"):
+        sys.exit(
+            f"diffcheck: the reference checkout is absent ({REF}/src not "
+            "found); it is needed to compile the reference engine"
+        )
     os.makedirs(BIN, exist_ok=True)
     srcs = subprocess.run(
         ["find", f"{REF}/src", "-name", "*.java"], capture_output=True, text=True
