@@ -1,13 +1,14 @@
 """One timed index build at a given parallelism, in its OWN JVM/process —
-the unit of the paired N-vs-4N scaling experiment (bench.py emits the
-medians into BENCH_r{N}.json "scaling").
+the unit of bench.py's paired N→4N scaling experiment (every pair lands in
+the "scaling" block of its last stdout line and BENCH/detail_latest.json).
 
 Run from the repo root (or with it on PYTHONPATH):
 
     python jobs/scaling_probe.py --cpus 2 --pages-dir /dev/shm/pages \
         --n-docs 100000 [--warmup-dir /dev/shm/warm_pages]
 
-Prints ONE JSON line: {"cpus", "n_docs", "build_sec", "docs_per_sec"}.
+Prints ONE JSON line: {"cpus", "n_docs", "build_sec", "docs_per_sec",
+"phase_secs"}.
 A fresh process per probe keeps the JVM, python workers, and GC state of
 one parallelism level from bleeding into the other (the sandbox stand-in
 for separate clusters); the optional warmup build absorbs first-job
@@ -25,37 +26,6 @@ import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
-
-def _tree_cpu_sec(root_pid: int) -> float:
-    """utime+stime (seconds) summed over root + ALL live descendants via
-    /proc — the JVM and its python workers are children of this process,
-    so sampling the tree before/after the timed build gives the build's
-    actual hardware occupancy (cores_used = cpu_sec / wall). getrusage
-    can't do this: RUSAGE_CHILDREN only counts reaped children and the
-    JVM is still alive during the measurement."""
-    children: dict[int, list[int]] = {}
-    for pid in os.listdir("/proc"):
-        if not pid.isdigit():
-            continue
-        try:
-            with open(f"/proc/{pid}/stat") as f:
-                parts = f.read().rsplit(")", 1)[1].split()
-            children.setdefault(int(parts[1]), []).append(int(pid))
-        except OSError:
-            continue
-    tck = os.sysconf("SC_CLK_TCK")
-    total, stack = 0.0, [root_pid]
-    while stack:
-        p = stack.pop()
-        try:
-            with open(f"/proc/{p}/stat") as f:
-                parts = f.read().rsplit(")", 1)[1].split()
-            total += (int(parts[11]) + int(parts[12])) / tck
-            stack.extend(children.get(p, []))
-        except OSError:
-            continue
-    return total
 
 
 def main() -> None:
@@ -92,14 +62,11 @@ def main() -> None:
         pages = spark.read.parquet(args.pages_dir)
         out = tempfile.mkdtemp(prefix="scale_idx_", dir=scratch)
         try:
-            me = os.getpid()
-            c0 = _tree_cpu_sec(me)
             t0 = time.time()
             stats = IndexBuilder(spark, out, bucket_docs=args.bucket_docs).build(
                 pages
             )
             el = time.time() - t0
-            cpu = _tree_cpu_sec(me) - c0
         finally:
             shutil.rmtree(out, ignore_errors=True)
         print(
@@ -109,17 +76,6 @@ def main() -> None:
                     "n_docs": args.n_docs,
                     "build_sec": round(el, 3),
                     "docs_per_sec": round(args.n_docs / el, 1),
-                    # actual hardware occupancy of the whole process tree
-                    # (JVM task threads + python workers): a local[N]
-                    # pyspark probe occupies MORE than N cores (N JVM
-                    # threads feeding N python workers), and the overlap
-                    # materializes more on the lo side (measured 1.39× at
-                    # local[2] vs 1.17× at local[8] — the hi side's extra
-                    # threads stall on the shared bus), so the raw wall
-                    # ratio UNDER-credits the hi side; cores_used lets the
-                    # experiment also report throughput-per-occupied-core
-                    "cpu_sec": round(cpu, 1),
-                    "cores_used": round(cpu / el, 2),
                     # per-phase seconds: lets the experiment report WHERE a
                     # side loses time (scalable docs/postings phases vs the
                     # fixed id-stats/lexicon tail) instead of one opaque

@@ -70,8 +70,18 @@ def job_spark(app: str) -> SparkSession:
     gateway is announced in ``PYSPARK_GATEWAY_PORT``) the submitted master
     and ``--conf`` values stand and ENGINE_CONFS fill only the keys the
     submission left unset; a plain-python run gets ``get_spark``'s
-    host-sized ``local[n]`` session, so ``SPARK_GRAFT_CPUS`` applies."""
+    host-sized ``local[n]`` session, so ``SPARK_GRAFT_CPUS`` applies.
+
+    A plain-python run also puts the repo root on ``PYTHONPATH`` before
+    the JVM starts: Spark's Python workers inherit the JVM's environment,
+    not the driver's ``sys.path``, and would otherwise import
+    ``searchengine_spark`` only when started from the repo root
+    (``spark-submit --py-files dist/engine.zip`` ships it instead)."""
     if "PYSPARK_GATEWAY_PORT" not in os.environ:
+        root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+        paths = os.environ.get("PYTHONPATH", "").split(os.pathsep)
+        if root not in paths:
+            os.environ["PYTHONPATH"] = os.pathsep.join([root] + [p for p in paths if p])
         return get_spark(app)
     from pyspark import SparkConf, SparkContext
 

@@ -1,326 +1,121 @@
-"""Unit tests for bench.py's scaling-experiment interference guard.
+"""Unit tests for bench.py's pinned N→4N scaling experiment.
 
-The guard exists because difference-in-differences cannot cancel a host
-event that hits ONLY one probe window (observed: an 8-core probe at
-2-core speed while the same pair's control was normal). These tests
-drive `_scaling_experiment` with monkeypatched probes/controls — no
-subprocesses, no Spark — and pin the discard/retry/reporting contract.
+`_scaling_experiment` is driven with monkeypatched staging and probes (no
+subprocesses, no Spark); the tests pin the pair order, the efficiency
+reading and that every pair is reported as drawn.
 """
 
 from __future__ import annotations
 
-import sys
 import os
+import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import bench
 
 
-class _Env:
-    """Monkeypatch staging + probes; restore on exit."""
+def _fake(monkeypatch, pair_script):
+    """Serve one (lo_dps, hi_dps) per pair, keyed by cpus so the fake is
+    agnostic to the per-pair order; returns the probe call log."""
+    calls, pairs, current = [], iter(pair_script), {}
 
-    def __init__(self, monkeypatch, pair_script, ctl_sec_lo=40.0, ctl_sec_hi=11.0,
-                 ctl_script=None):
-        # pair_script: (lo_dps, hi_dps) per probe-pair ATTEMPT. The fake
-        # probe serves each attempt keyed by cpus, so it is agnostic to
-        # the experiment's per-pair lo/hi order alternation.
-        self.calls = []
-        attempts = iter(pair_script)
-        self._current: dict[int, float] = {}
-        monkeypatch.setenv("SPARK_GRAFT_SCALING_RETRY_PAUSE", "0")
+    def fake_probe(cpus, pages_dir, warm_dir, cores):
+        if not current:
+            current.update(zip((1, 4), next(pairs)))
+        dps = current.pop(cpus)
+        calls.append((cpus, cores))
+        return {"docs_per_sec": dps, "phase_secs": {"docs": 1000.0 / dps}}
 
-        def fake_stage(n_docs, files=64):
-            return (
-                "/nonexistent/pages",
-                "/nonexistent/warm",
-                "/nonexistent/enc",
-                ["text"] * 4,
-            )
-
-        def fake_probe(cpus, pages_dir, warm_dir, n_docs, cores=None):
-            if not self._current:
-                lo_dps, hi_dps = next(attempts)
-                self._current = {2: lo_dps, 8: hi_dps}
-            dps = self._current.pop(cpus)
-            self.calls.append((cpus, dps))
-            return {"cpus": cpus, "n_docs": n_docs, "docs_per_sec": dps}
-
-        # ctl_script: optional (lo_sec, hi_sec) per pair ATTEMPT, for
-        # control-quality-gate tests; also keyed by procs so it is
-        # order-agnostic like the probe script.
-        ctl_attempts = iter(ctl_script or [])
-        self._ctl_current: dict[int, float] = {}
-
-        def fake_ctl(texts, procs, enc_dir=None, chunk=2000, cores=None):
-            if ctl_script is None:
-                return ctl_sec_lo if procs == 2 else ctl_sec_hi
-            if not self._ctl_current:
-                lo_s, hi_s = next(ctl_attempts)
-                self._ctl_current = {2: lo_s, 8: hi_s}
-            return self._ctl_current.pop(procs)
-
-        monkeypatch.setattr(bench, "_stage_scaling_corpus", fake_stage)
-        monkeypatch.setattr(bench, "_probe", fake_probe)
-        monkeypatch.setattr(bench, "_kernel_control_sec", fake_ctl)
-        monkeypatch.setattr(bench.shutil, "rmtree", lambda *a, **k: None)
-        # force the UNPINNED regime by default so the guard expectations
-        # are host-independent (whether taskset exists on the test box
-        # must not change which discard rules are active); the pinned
-        # regime has its own dedicated test below.
-        monkeypatch.setattr(bench, "_pin_cores", lambda n: None)
-
-
-def test_clean_pairs_no_retry(monkeypatch):
-    # 3 pairs, hi = 3.2x lo everywhere -> efficiency 0.8, nothing discarded
-    _Env(monkeypatch, pair_script=[(1000, 3200)] * 3)
-    out = bench._scaling_experiment(n_lo=2, n_docs=1000, pairs=3, phase_retry_pairs=0)
-    assert out["pairs"] == 3
-    assert out["efficiency"] == 0.8
-    assert out["interference_retries"] == 0
-    assert out["discarded_pairs"] == []
-    assert len(out["efficiency_pairs"]) == 3
-    # unfiltered medians equal the gated ones when nothing was discarded
-    assert out["efficiency_all_draws"] == out["efficiency"]
-    # control: (40/11)/4 = 0.909
-    assert abs(out["control_efficiency"] - 0.909) < 1e-3
-
-
-def test_interference_pair_discarded_and_rerun(monkeypatch):
-    # pair 2's hi probe collapses to lo speed (eff 0.25 < 0.5): it must be
-    # discarded, reported, re-run, and excluded from medians/bands
-    env = _Env(
-        monkeypatch,
-        pair_script=[(1000, 3200), (1000, 1000), (1000, 3200), (1000, 3200)],
-    )
-    out = bench._scaling_experiment(n_lo=2, n_docs=1000, pairs=3, phase_retry_pairs=0)
-    assert out["interference_retries"] == 1
-    assert out["discarded_pairs"] == [
-        {"e": 0.25, "c": 0.909, "reason": "implausible_efficiency"}
-    ]
-    assert out["efficiency"] == 0.8
-    # the unfiltered median still sees the discarded draw
-    assert out["efficiency_all_draws"] == 0.8  # median of [.8,.25,.8,.8]
-    assert out["efficiency_pairs"] == [0.8, 0.8, 0.8]
-    # the collapsed hi (1000 dps) never enters the hi band
-    assert out["band_8"] == [3200.0, 3200.0]
-    # 4 pairs of probe calls were made (3 kept + 1 discarded)
-    assert len(env.calls) == 8
-
-
-def test_retry_budget_bounds_and_keeps_bad_pair(monkeypatch):
-    # every pair is interfered: after the 6-retry budget is exhausted the
-    # remaining bad pairs are KEPT (reported honestly, never an infinite loop)
-    _Env(monkeypatch, pair_script=[(1000, 1000)] * 9)
-    out = bench._scaling_experiment(n_lo=2, n_docs=1000, pairs=3, phase_retry_pairs=0)
-    assert out["interference_retries"] == 6
-    assert [d["e"] for d in out["discarded_pairs"]] == [0.25] * 6
-    # 3 kept pairs, all at the (real, if implausible) 0.25
-    assert out["efficiency_pairs"] == [0.25, 0.25, 0.25]
-    assert out["efficiency"] == 0.25
-
-
-def test_host_starved_pair_redrawn_when_pinned(monkeypatch):
-    # pinned regime: a pair whose hi probe tree occupied <0.85·N cores ran
-    # in a window where the hypervisor withheld the pinned hardware — the
-    # low reading is uninformative and redrawn; the redraw (healthy
-    # occupancy) is kept
-    _Env(monkeypatch, pair_script=[(1000, 2400), (1000, 3400)])
-    monkeypatch.setattr(bench, "_pin_cores", lambda n: f"0-{n-1}")
-    orig_probe = bench._probe
-
-    def probe_with_occ(cpus, pages_dir, warm_dir, n_docs, cores=None):
-        r = orig_probe(cpus, pages_dir, warm_dir, n_docs, cores=cores)
-        r["cores_used"] = 6.1 if (cpus == 8 and r["docs_per_sec"] == 2400) else (
-            7.3 if cpus == 8 else 1.93
-        )
-        return r
-
-    monkeypatch.setattr(bench, "_probe", probe_with_occ)
-    out = bench._scaling_experiment(n_lo=2, n_docs=1000, pairs=1, phase_retry_pairs=0)
-    assert out["interference_retries"] == 1
-    assert out["discarded_pairs"][0]["reason"].startswith("host_starved_cores")
-    assert out["efficiency_pairs"] == [0.85]
-
-
-def test_host_starved_pair_kept_when_clears_bar(monkeypatch):
-    # a ≥0.8 reading from a starved window is a LOWER BOUND and is kept
-    _Env(monkeypatch, pair_script=[(1000, 3300)])
-    monkeypatch.setattr(bench, "_pin_cores", lambda n: f"0-{n-1}")
-    orig_probe = bench._probe
-
-    def probe_with_occ(cpus, pages_dir, warm_dir, n_docs, cores=None):
-        r = orig_probe(cpus, pages_dir, warm_dir, n_docs, cores=cores)
-        r["cores_used"] = 6.0 if cpus == 8 else 1.93
-        return r
-
-    monkeypatch.setattr(bench, "_probe", probe_with_occ)
-    out = bench._scaling_experiment(n_lo=2, n_docs=1000, pairs=1, phase_retry_pairs=0)
-    assert out["interference_retries"] == 0
-    assert out["efficiency_pairs"] == [0.825]
-
-
-def test_superlinear_pair_discarded(monkeypatch):
-    # the symmetric side of the implausibility band (ADVICE r3): a pair at
-    # 4.8x for 4x cores (eff 1.2) is as much a measurement artifact as a
-    # collapsed one, and must not bias the median upward
-    _Env(
-        monkeypatch,
-        pair_script=[(1000, 3200), (1000, 4800), (1000, 3200), (1000, 3200)],
-    )
-    out = bench._scaling_experiment(n_lo=2, n_docs=1000, pairs=3, phase_retry_pairs=0)
-    assert out["interference_retries"] == 1
-    assert out["discarded_pairs"][0]["reason"] == "implausible_efficiency"
-    assert out["discarded_pairs"][0]["e"] == 1.2
-    assert out["efficiency"] == 0.8
-
-
-def test_low_control_pair_redrawn(monkeypatch):
-    # control-quality gate (VERDICT r3 #2): a pair whose matched control
-    # scales <0.85 was drawn in a throttled host window — by the DiD
-    # argument the draw says nothing about the engine, so it is redrawn
-    _Env(
-        monkeypatch,
-        pair_script=[(1000, 3200), (1000, 2800), (1000, 3200), (1000, 3200)],
-        ctl_script=[(40.0, 11.0), (40.0, 13.0), (40.0, 11.0), (40.0, 11.0)],
-    )
-    out = bench._scaling_experiment(n_lo=2, n_docs=1000, pairs=3, phase_retry_pairs=0)
-    assert out["interference_retries"] == 1
-    assert out["discarded_pairs"] == [
-        {"e": 0.7, "c": 0.769, "reason": "low_control"}
-    ]
-    assert out["efficiency"] == 0.8
-    # control median reflects only the kept (healthy-window) pairs
-    assert abs(out["control_efficiency"] - 0.909) < 1e-3
+    monkeypatch.setattr(bench, "_stage_scaling_corpus", lambda: ("/x/p", "/x/w"))
+    monkeypatch.setattr(bench, "_probe", fake_probe)
+    monkeypatch.setattr(bench, "_pin_cores", lambda n: ",".join(map(str, range(n))))
+    return calls
 
 
 def test_pair_order_alternates(monkeypatch):
-    # pair 0 runs lo-first, pair 1 hi-first: monotone host drift then hits
-    # opposite sides of consecutive pairs and cancels in the median
-    env = _Env(monkeypatch, pair_script=[(1000, 3200)] * 2)
-    out = bench._scaling_experiment(n_lo=2, n_docs=1000, pairs=2, phase_retry_pairs=0)
-    assert [c for c, _ in env.calls] == [2, 8, 8, 2]
+    calls = _fake(monkeypatch, [(1000, 3200)] * 3)
+    out = bench._scaling_experiment(cpus=4)
+    assert calls == [(1, "0"), (4, "0,1,2,3"), (4, "0,1,2,3"), (1, "0"),
+                     (1, "0"), (4, "0,1,2,3")]
+    assert [r["first"] for r in out["pairs"]] == [1, 4, 1]
+    assert (out["n_lo"], out["n_hi"]) == (1, 4)
+
+
+def test_clean_pairs_no_retry(monkeypatch):
+    # exactly `pairs` pairs are drawn; efficiency is the median of the
+    # per-pair (hi/lo)/4, not a ratio of medians
+    calls = _fake(monkeypatch, [(1000, 3200), (800, 3400), (1000, 2400)])
+    out = bench._scaling_experiment(cpus=4)
+    assert len(calls) == 6
+    assert [r["efficiency"] for r in out["pairs"]] == [0.8, 1.062, 0.6]
     assert out["efficiency"] == 0.8
+    assert out["docs_per_sec_hi"] == 3200
 
 
-def test_phase_retry_extends_experiment_once(monkeypatch):
-    # all 3 quota pairs draw a throttled window (eff 0.6, control healthy
-    # so nothing is discarded): the experiment extends itself by 2 extra
-    # pairs ONCE; medians then see the recovered window
-    _Env(
-        monkeypatch,
-        pair_script=[(1000, 2400)] * 3 + [(1000, 3200)] * 2,
-    )
-    out = bench._scaling_experiment(n_lo=2, n_docs=1000, pairs=3, phase_retry_pairs=2)
-    assert out["phase_retry_pairs"] == 2
-    assert out["pairs"] == 5
-    assert sorted(out["efficiency_pairs"]) == [0.6, 0.6, 0.6, 0.8, 0.8]
-    assert out["efficiency"] == 0.6  # median of 5 — honest, not cherry-picked
+def test_collapsed_pair_reported_not_redrawn(monkeypatch):
+    # a pair whose hi side collapses to lo speed (0.25) stays in the
+    # record and in the median; no extra pair is drawn to replace it
+    calls = _fake(monkeypatch, [(1000, 3200), (1000, 1000), (1000, 3200)])
+    out = bench._scaling_experiment(cpus=4)
+    assert len(calls) == 6
+    assert [r["efficiency"] for r in out["pairs"]] == [0.8, 0.25, 0.8]
+    assert out["efficiency"] == 0.8
+    assert out["pairs"][1]["docs_per_sec"] == {"4": 1000, "1": 1000}
 
 
-def test_phase_retry_triggers_on_raw_miss_even_when_did_passes(monkeypatch):
-    # raw median 0.76 (<0.8) while the control reads 0.8 so DiD = 0.95
-    # (≥0.9): the north rule's bar is the RAW reading, so a raw miss
-    # alone extends the experiment — the DiD correction diagnoses the
-    # throttled window, it is not the acceptance criterion. Pinned
-    # regime (the low_control per-pair gate is inactive there, so the
-    # pairs are KEPT and only the experiment-level extension fires).
-    env = _Env(
-        monkeypatch,
-        pair_script=[(1000, 3040)] * 3 + [(1000, 3200)] * 2,
-        ctl_sec_hi=12.5,  # control (40/12.5)/4 = 0.8
-    )
-    monkeypatch.setattr(bench, "_pin_cores", lambda n: list(range(n)))
-    out = bench._scaling_experiment(n_lo=2, n_docs=1000, pairs=3, phase_retry_pairs=2)
-    assert out["pinned"] is True
-    assert out["discarded_pairs"] == []
-    assert out["phase_retry_pairs"] == 2
-    assert out["pairs"] == 5
-    assert sorted(out["efficiency_pairs"]) == [0.76, 0.76, 0.76, 0.8, 0.8]
-    # medians stay over ALL kept pairs — the extension cannot cherry-pick
-    assert out["efficiency"] == 0.76
+def test_superlinear_pair_reported_not_redrawn(monkeypatch):
+    # the other side of the implausible band: 4.8x for 4x cores (1.2) is
+    # kept and reported with its per-phase times, not discarded
+    calls = _fake(monkeypatch, [(1000, 3200), (1000, 4800), (1000, 3200)])
+    out = bench._scaling_experiment(cpus=4)
+    assert len(calls) == 6
+    assert [r["efficiency"] for r in out["pairs"]] == [0.8, 1.2, 0.8]
+    assert out["efficiency"] == 0.8
+    assert out["pairs"][1]["phase_secs"] == {"4": {"docs": 1000.0 / 4800},
+                                             "1": {"docs": 1.0}}
 
 
-def test_phase_retry_not_triggered_when_criterion_met(monkeypatch):
-    env = _Env(monkeypatch, pair_script=[(1000, 3200)] * 3)
-    out = bench._scaling_experiment(n_lo=2, n_docs=1000, pairs=3, phase_retry_pairs=2)
-    assert out["phase_retry_pairs"] == 0
-    assert len(env.calls) == 6  # exactly 3 pairs, no extension
+def test_every_bad_pair_kept_without_retry(monkeypatch):
+    # every pair collapsed: all are kept and the median reads the real,
+    # if implausible, 0.25
+    calls = _fake(monkeypatch, [(1000, 1000)] * 3)
+    out = bench._scaling_experiment(cpus=4)
+    assert len(calls) == 6
+    assert [r["efficiency"] for r in out["pairs"]] == [0.25, 0.25, 0.25]
+    assert out["efficiency"] == 0.25
+    assert out["docs_per_sec_hi"] == 1000
 
 
-def test_per_core_efficiency_uses_occupancy(monkeypatch):
-    # probes reporting cores_used: raw divides by 4, per-core by the
-    # measured occupancy ratio (9.5/2.8 ≈ 3.39)
-    env = _Env(monkeypatch, pair_script=[(1000, 3000)] * 3)
-    orig_probe = bench._probe
-
-    def probe_with_occ(cpus, pages_dir, warm_dir, n_docs, cores=None):
-        out = orig_probe(cpus, pages_dir, warm_dir, n_docs)
-        out["cores_used"] = 2.8 if cpus == 2 else 9.5
-        return out
-
-    monkeypatch.setattr(bench, "_probe", probe_with_occ)
-    out = bench._scaling_experiment(n_lo=2, n_docs=1000, pairs=3, phase_retry_pairs=0)
-    assert out["efficiency"] == 0.75
-    assert abs(out["efficiency_per_core"] - 3.0 / (9.5 / 2.8)) < 1e-3
-    assert out["cores_used_2"] == 2.8
-    assert out["cores_used_8"] == 9.5
+def test_pair_count_is_fixed(monkeypatch):
+    # the number of pairs is SCALING_PAIRS whatever the readings; a low
+    # efficiency does not extend the experiment
+    monkeypatch.setattr(bench, "SCALING_PAIRS", 5)
+    calls = _fake(monkeypatch, [(1000, 2000)] * 5)
+    out = bench._scaling_experiment(cpus=4)
+    assert len(calls) == 10
+    assert len(out["pairs"]) == 5
+    assert [r["first"] for r in out["pairs"]] == [1, 4, 1, 4, 1]
+    assert out["efficiency"] == 0.5
 
 
-def test_high_raw_pair_kept_despite_low_control(monkeypatch):
-    # throttle suppresses the hi side, so a >=0.8 raw reading from a
-    # low-control window is a LOWER BOUND on the engine and must be kept
-    _Env(
-        monkeypatch,
-        pair_script=[(1000, 3200), (1000, 3300), (1000, 3200)],
-        ctl_script=[(40.0, 11.0), (40.0, 13.0), (40.0, 11.0)],
-    )
-    out = bench._scaling_experiment(n_lo=2, n_docs=1000, pairs=3, phase_retry_pairs=0)
-    assert out["interference_retries"] == 0
-    assert out["discarded_pairs"] == []
-    assert out["efficiency_pairs"] == [0.8, 0.8, 0.825]
+def test_pin_cores_uses_allowed_cpus(monkeypatch):
+    monkeypatch.setattr(bench.os, "sched_getaffinity", lambda pid: {7, 5, 4, 6})
+    monkeypatch.setattr(bench.shutil, "which", lambda name: "/usr/bin/taskset")
+    assert bench._pin_cores(1) == "4"
+    assert bench._pin_cores(4) == "4,5,6,7"
+    assert bench._pin_cores(8) is None
 
 
-def test_pinned_regime_keeps_low_control_pairs(monkeypatch):
-    # PINNED probes/controls: the control's steady state is the real
-    # per-core bus ceiling (~0.65-0.75), not a throttle flag, so the
-    # low-control redraw rule must be inactive — a 0.7-efficiency pair
-    # with a 0.769 control is a KEPT draw, corrected by DiD instead.
-    _Env(
-        monkeypatch,
-        pair_script=[(1000, 2800)] * 3,
-        ctl_script=[(40.0, 13.0)] * 3,
-    )
-    monkeypatch.setattr(bench, "_pin_cores", lambda n: f"0-{n - 1}")
-    out = bench._scaling_experiment(n_lo=2, n_docs=1000, pairs=3, phase_retry_pairs=0)
-    assert out["pinned"] is True
-    assert out["interference_retries"] == 0
-    assert out["discarded_pairs"] == []
-    assert out["efficiency"] == 0.7
-    assert abs(out["control_efficiency"] - 0.769) < 1e-3
-    # DiD reads engine/control = 0.7/0.769 ≈ 0.910
-    assert abs(out["efficiency_vs_control"] - 0.7 / (40.0 / 13.0 / 4)) < 1e-3
-    assert "PINNED" in out["method"]
+def test_fewer_than_four_cpus_skipped(monkeypatch):
+    calls = _fake(monkeypatch, [])
+    out = bench._scaling_experiment(cpus=3)
+    assert "skipped" in out and calls == []
 
 
 def test_unpinned_regime_flagged_in_payload(monkeypatch):
-    _Env(monkeypatch, pair_script=[(1000, 3200)] * 2)
-    out = bench._scaling_experiment(n_lo=2, n_docs=1000, pairs=2, phase_retry_pairs=0)
-    assert out["pinned"] is False
-    assert "PINNED" not in out["method"]
-
-
-def test_suite_ambient_probes():
-    """The query-suite ambient probes must return sane, bounded numbers:
-    the steal probe is a FIXED single-thread elementwise burn (cpu/wall
-    can only fall below 1 via hypervisor steal — never legitimately
-    exceed it by much), and the /proc tree-CPU walker must be monotone
-    so per-query cores_used deltas are non-negative."""
-    p = bench._steal_probe()
-    assert p["wall_sec"] > 0
-    assert 0.0 < p["cpu_over_wall"] <= 1.05
-    c0 = bench._tree_cpu_sec()
-    # burn a little CPU in-process; the tree includes this process
-    x = sum(i * i for i in range(200_000))
-    assert x > 0
-    assert bench._tree_cpu_sec() >= c0
+    # no unpinned fallback: a pair that cannot be pinned is not measured
+    calls = _fake(monkeypatch, [])
+    monkeypatch.setattr(bench, "_pin_cores", lambda n: None if n == 4 else "0")
+    out = bench._scaling_experiment(cpus=4)
+    assert out["skipped"].startswith("cannot pin 4 CPUs") and calls == []

@@ -131,13 +131,6 @@ def test_committed_plan_dumps_are_current():
     assert "MapInPandas" in atxt or "PythonMapInArrow" in atxt, atxt[:500]
     assert "Exchange" not in atxt, atxt[:500]
 
-    batch = os.path.join(plans_dir, "batch_bm25_kernel.txt")
-    if os.path.exists(batch):
-        with open(batch) as f:
-            btxt = f.read()
-        assert "FlatMapGroupsInPandas" in btxt, btxt[:500]
-        assert "BatchEvalPython" not in btxt, btxt[:500]
-
 
 def test_ivf_fit_shared_across_queries(spark):
     """ann_ivf_topk and embedding_neardup_pairs must reuse one fitted
