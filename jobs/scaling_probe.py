@@ -2,7 +2,7 @@
 the unit of bench.py's paired N→4N scaling experiment (every pair lands in
 the "scaling" block of its last stdout line and BENCH/detail_latest.json).
 
-Run from the repo root (or with it on PYTHONPATH):
+Run from any directory:
 
     python jobs/scaling_probe.py --cpus 2 --pages-dir /dev/shm/pages \
         --n-docs 100000 [--warmup-dir /dev/shm/warm_pages]

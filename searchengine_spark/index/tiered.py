@@ -42,12 +42,7 @@ from pyspark.sql import functions as F
 
 from ..query import scoring
 from .build import _encode_block
-from .javapq import (
-    assign_tiers,
-    assign_tiers_flat,
-    assign_tiers_scored,
-    assign_tiers_scored_flat,
-)
+from .javapq import assign_tiers_flat, assign_tiers_scored_flat
 
 LABEL_SCHEMA = "term string, doc_id long, tier int"
 SCORED_LABEL_SCHEMA = "term string, doc_id long, tier int, score double"
@@ -157,61 +152,6 @@ def _label_scored_one(n_docs: float):
     return one
 
 
-def _label_tiers_fn(pdf: pd.DataFrame) -> pd.DataFrame:
-    """One pandas group per term, SLIM input (term, doc_id, tf) only:
-    docID order in, (doc_id → tier) labels out. The posting payload
-    (positions) never enters this task — labels are joined back."""
-    pdf = pdf.sort_values("doc_id").reset_index(drop=True)
-    out = []
-    for term, g in pdf.groupby("term", sort=False):
-        tiers = assign_tiers(g["doc_id"].to_numpy(), g["tf"].to_numpy())
-        out.append(
-            pd.DataFrame(
-                {
-                    "term": g["term"],
-                    "doc_id": g["doc_id"],
-                    "tier": np.asarray(tiers, dtype=np.int32),
-                }
-            )
-        )
-    return (
-        pd.concat(out)
-        if out
-        else pd.DataFrame({"term": [], "doc_id": [], "tier": []})
-    )
-
-
-def _label_scored_fn(pdf: pd.DataFrame, n_docs: float) -> pd.DataFrame:
-    """Per-term slim labeler: score = wdt·wqt with N frozen at build
-    (TieredIndexWriterWithScore.java:130-144), tiers by the score-ranked
-    heap with HashMap-Integer insertion order."""
-    import math as _math
-
-    pdf = pdf.sort_values("doc_id").reset_index(drop=True)
-    out = []
-    for term, g in pdf.groupby("term", sort=False):
-        df = float(len(g))
-        wqt = scoring.wqt("tfidf_ref", n_docs, df)
-        tfs = g["tf"].to_numpy()
-        scores = [(1.0 + _math.log(int(tf))) * wqt for tf in tfs]
-        tiers = assign_tiers_scored(g["doc_id"].tolist(), scores)
-        out.append(
-            pd.DataFrame(
-                {
-                    "term": g["term"],
-                    "doc_id": g["doc_id"],
-                    "tier": np.asarray(tiers, dtype=np.int32),
-                    "score": np.asarray(scores, dtype=np.float64),
-                }
-            )
-        )
-    return (
-        pd.concat(out)
-        if out
-        else pd.DataFrame({"term": [], "doc_id": [], "tier": [], "score": []})
-    )
-
-
 def build_tiered_scored(
     spark: SparkSession, idx_dir: str, bucket_docs: int | None = None
 ) -> dict:
@@ -232,7 +172,7 @@ def build_tiered_scored(
     # full-index decode, NO term filter: the vocabulary never transits the
     # driver (the round-2 lexicon.collect() was a driver-memory item at
     # web vocab scale, VERDICT r2 'what's wrong' #4)
-    decoded = decoded_postings(idx, None)
+    decoded = decoded_postings(idx, None, ("docs_vb", "tfs_vb"))
     # slim label pass: only (term, doc_id, tf) streams per term; the
     # labels (+ frozen-N scores) join back to the distributed rows
     labels = _labels_streamed(
@@ -307,7 +247,7 @@ def build_tiered(
 ) -> dict:
     """Derive postings_tiered + lexicon_tiered from a built flat index.
     Resumable: skipped when the manifest already exists."""
-    from ..query.exec import IndexHandle, decoded_postings_with_positions
+    from ..query.exec import IndexHandle, decoded_postings
 
     man = os.path.join(idx_dir, "_manifests", "tiered.json")
     if os.path.exists(man):
@@ -317,7 +257,7 @@ def build_tiered(
     if bucket_docs is None:
         bucket_docs = int(idx.meta.get("bucket_docs", 1 << 17))
     # full-index decode, NO term filter (see build_tiered_scored note)
-    decoded = decoded_postings_with_positions(idx, None)
+    decoded = decoded_postings(idx, None, ("docs_vb", "tfs_vb", "pos_vb"))
     # slim label pass (term, doc_id, tf) → labels joined back: positions
     # stay distributed, never gathered into the per-term task
     labels = _labels_streamed(

@@ -2,9 +2,10 @@
 
 Same wire idea as the reference (``Milestone2/VariableByteEncoding.java:20-58``:
 big-endian base-128 groups, MSB set on the terminating byte), implemented
-as numpy whole-array kernels — no per-integer Python. These run inside
-Arrow-batched pandas UDFs, so the Python interpreter touches each posting
-*block*, never each posting.
+as numpy whole-array kernels — no per-integer Python. The Spark decode
+kernel (``query/exec.decode_blocks``, ``mapInArrow``) decodes a whole
+Arrow batch of blocks per call and the serving tier one block per call,
+so the Python interpreter never touches a single posting.
 
 The north rule pins "sorted, delta+varbyte-compressed posting lists" as an
 explicit index property (Parquet's own page encoding is orthogonal — these
@@ -129,12 +130,21 @@ def encode_positions_flat(flat: np.ndarray, tfs: np.ndarray) -> bytes:
     return vb_encode(gaps.astype(_U64))
 
 
+def decode_positions_flat(buf: bytes, tfs: np.ndarray) -> np.ndarray:
+    """Inverse of :func:`encode_positions_flat`: every position of the
+    blob in ONE flat int64 array, posting after posting (``tfs`` gives
+    the lengths). Each posting's delta chain restarts at its first,
+    absolute position, so any concatenation of delta+varbyte blobs —
+    a batch's ``docs_vb`` blocks with their posting counts as ``tfs``
+    too — decodes in the same single pass."""
+    tfs = np.asarray(tfs, dtype=np.int64)
+    cum = np.cumsum(vb_decode(buf).astype(np.int64))
+    prev = np.concatenate((np.zeros(1, np.int64), cum))[np.cumsum(tfs) - tfs]
+    return cum - np.repeat(prev, tfs)
+
+
 def decode_position_lists(buf: bytes, tfs: np.ndarray) -> list[np.ndarray]:
-    flat = vb_decode(buf).astype(np.int64)
-    out: list[np.ndarray] = []
-    o = 0
-    for tf in np.asarray(tfs, dtype=np.int64):
-        seg = flat[o : o + tf]
-        out.append(np.cumsum(seg))
-        o += tf
-    return out
+    """:func:`decode_positions_flat`, split into one array per posting."""
+    tfs = np.asarray(tfs, dtype=np.int64)
+    flat = decode_positions_flat(buf, tfs)
+    return [flat[e - n : e] for e, n in zip(np.cumsum(tfs).tolist(), tfs.tolist())]

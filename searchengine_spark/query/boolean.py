@@ -280,10 +280,7 @@ class SparkBackend:
     pushes `term = 'x'` into each branch's parquet scan."""
 
     def __init__(self, idx) -> None:
-        from .exec import decoded_postings_with_positions
-
         self.idx = idx
-        self._decoded_fn = decoded_postings_with_positions
         self.base: DataFrame | None = None
         self.present: set[str] = set()
 
@@ -295,7 +292,11 @@ class SparkBackend:
         # presence via the handle's RAM df memo — no Spark job per query
         self.present = set(self.idx.term_dfs(sorted(terms)))
         if self.present:
-            self.base = self._decoded_fn(self.idx, sorted(self.present))
+            from .exec import decoded_postings
+
+            self.base = decoded_postings(
+                self.idx, sorted(self.present), ("docs_vb", "tfs_vb", "pos_vb")
+            )
 
     def lookup(self, term: str, with_positions: bool):
         if term not in self.present:

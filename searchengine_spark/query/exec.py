@@ -1,8 +1,13 @@
 """Ranked top-k query execution (SURVEY.md §7.5).
 
 Spark shape (§3.2): tiny broadcast dim (query-term weights) ⋈ bucket/
-rowgroup-pruned postings scan → Arrow-UDF block decode → JVM aggregation
-→ top-k via ORDER BY ... LIMIT k (TakeOrderedAndProject — no full sort).
+rowgroup-pruned postings scan → block decode → JVM aggregation → top-k
+via ORDER BY ... LIMIT k (TakeOrderedAndProject — no full sort).
+
+Every Spark path that reads posting blocks — ranked, the tf-idf batch
+exchange, boolean/NEAR, the tiered builds and tiered queries — decodes
+them through ONE ``mapInArrow`` kernel (``decode_blocks``), which decodes
+exactly the block columns its input carries.
 
 Two scorers on one index, both defined once in query/scoring.py:
 ``tfidf_ref`` (the reference's lnc tf-idf, the rank-identity gate) and
@@ -23,10 +28,12 @@ from dataclasses import dataclass
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, IntegerType, LongType, StructField, StructType
 
-from ..index.varbyte import decode_sorted, vb_decode
+from ..index.varbyte import decode_positions_flat, decode_sorted, vb_decode
 from ..text.porter import porter_stem
 from ..text.tokenizer import remove_apostrophes, strip_for_query
 from . import scoring
@@ -123,114 +130,96 @@ class IndexHandle:
         return {t: self._df_memo[t] for t in set(terms) if self._df_memo.get(t, 0) > 0}
 
 
-def _decode_blocks(batches):
-    """mapInPandas kernel: posting blocks → (term, doc_id, tf, dl) rows.
-    numpy-vectorized; Python touches blocks, not postings. dl is the
-    denormalized per-posting doc length — BM25 scoring needs no join."""
-    for pdf in batches:
-        terms_out: list[np.ndarray] = []
-        docs_out: list[np.ndarray] = []
-        tfs_out: list[np.ndarray] = []
-        dls_out: list[np.ndarray] = []
-        for term, dvb, tvb, lvb in zip(
-            pdf["term"], pdf["docs_vb"], pdf["tfs_vb"], pdf["dls_vb"]
-        ):
-            d = decode_sorted(bytes(dvb))
-            t = vb_decode(bytes(tvb)).astype(np.int64)
-            terms_out.append(np.repeat(np.array([term], dtype=object), len(d)))
-            docs_out.append(d)
-            tfs_out.append(t)
-            dls_out.append(vb_decode(bytes(lvb)).astype(np.int64))
-        if terms_out:
-            yield pd.DataFrame(
-                {
-                    "term": np.concatenate(terms_out),
-                    "doc_id": np.concatenate(docs_out),
-                    "tf": np.concatenate(tfs_out),
-                    "dl": np.concatenate(dls_out),
-                }
-            )
+# posting-block column → the decoded per-posting column it becomes
+_BLOCK_COLS = {
+    "docs_vb": ("doc_id", LongType()),
+    "tfs_vb": ("tf", LongType()),
+    "dls_vb": ("dl", LongType()),
+    "pos_vb": ("positions", ArrayType(IntegerType())),
+}
 
 
-def _decode_blocks_plain(batches):
-    """3-column variant (term, doc_id, tf) for tables without the
-    denormalized dls_vb column (the tiered parity variants)."""
-    for pdf in batches:
-        terms_out, docs_out, tfs_out = [], [], []
-        for term, dvb, tvb in zip(pdf["term"], pdf["docs_vb"], pdf["tfs_vb"]):
-            d = decode_sorted(bytes(dvb))
-            t = vb_decode(bytes(tvb)).astype(np.int64)
-            terms_out.append(np.repeat(np.array([term], dtype=object), len(d)))
-            docs_out.append(d)
-            tfs_out.append(t)
-        if terms_out:
-            yield pd.DataFrame(
-                {
-                    "term": np.concatenate(terms_out),
-                    "doc_id": np.concatenate(docs_out),
-                    "tf": np.concatenate(tfs_out),
-                }
+def _blob_bytes(col: pa.Array) -> tuple[np.ndarray, np.ndarray]:
+    """A binary column's blobs as ONE zero-copy uint8 array plus each
+    row's [start, end) offsets into it (rebased, so sliced batches work)."""
+    _, offs, data = col.buffers()
+    width = np.int64 if pa.types.is_large_binary(col.type) else np.int32
+    off = np.frombuffer(offs, width)[col.offset : col.offset + len(col) + 1]
+    buf = np.frombuffer(data, np.uint8) if data is not None else np.empty(0, np.uint8)
+    return buf[off[0] : off[-1]], off - off[0]
+
+
+def _decode_kernel(batches):
+    """mapInArrow kernel: posting-block rows → one row per posting, the
+    'getPostings[WithPositions]' path (DiskInvertedIndex.java:43-126).
+    Whichever block columns the caller selected are decoded (see
+    ``_BLOCK_COLS``), so positions are paid for only when asked for
+    (lazy position decode, SURVEY §4); a per-posting list column
+    (``postings_scored.scores``) is flattened and any other column
+    (``term``) repeats per posting. Each column of a batch decodes in
+    ONE numpy pass over its concatenated blobs — Python touches batches,
+    not blocks or postings."""
+    for rb in batches:
+        if not rb.num_rows:
+            continue
+        names = rb.schema.names
+        blobs = {c: _blob_bytes(rb.column(c)) for c in _BLOCK_COLS if c in names}
+        buf, off = blobs["docs_vb"]
+        # postings per block = terminator bytes per docs blob
+        n = np.diff(np.searchsorted(np.flatnonzero(buf >= 128), off))
+        out = {"docs_vb": decode_positions_flat(buf, n)}
+        for c in ("tfs_vb", "dls_vb"):
+            if c in blobs:
+                out[c] = vb_decode(blobs[c][0]).astype(np.int64)
+        if "pos_vb" in blobs:  # needs tfs_vb: the tfs are the list lengths
+            tf = out["tfs_vb"]
+            # array<int> has int32 offsets: pa.array raises, never wraps
+            out["pos_vb"] = pa.ListArray.from_arrays(
+                pa.array(np.concatenate(([0], np.cumsum(tf))), pa.int32()),
+                pa.array(decode_positions_flat(blobs["pos_vb"][0], tf), pa.int32()),
             )
+        take = np.repeat(np.arange(rb.num_rows), n)
+        cols = [
+            pa.array(out[c]) if c in out
+            else col.flatten() if pa.types.is_list(col.type)
+            else col.take(take)
+            for c, col in zip(names, rb.columns)
+        ]
+        yield pa.RecordBatch.from_arrays(
+            cols, names=[_BLOCK_COLS[c][0] if c in _BLOCK_COLS else c for c in names]
+        )
+
+
+def decode_blocks(blocks: DataFrame) -> DataFrame:
+    """Decode a DataFrame of posting-block rows (it must carry
+    ``docs_vb``) into one row per posting with ``_decode_kernel``; the
+    output columns follow the input's, in its order."""
+    fields = [
+        StructField(*_BLOCK_COLS[f.name]) if f.name in _BLOCK_COLS
+        else StructField(f.name, f.dataType.elementType)
+        if isinstance(f.dataType, ArrayType)
+        else f
+        for f in blocks.schema.fields
+    ]
+    return blocks.mapInArrow(_decode_kernel, StructType(fields))
 
 
 def decoded_postings(
-    idx: IndexHandle, terms: list[str] | None
+    idx: IndexHandle,
+    terms: list[str] | None,
+    blocks: tuple[str, ...] = ("docs_vb", "tfs_vb", "dls_vb"),
 ) -> DataFrame:
     """Bucket-pruned scan (parquet row-group min/max on the term-sorted
-    files is the 'vocab binary search' analogue, SURVEY §4) + decode.
-    ``terms=None`` decodes the WHOLE postings table (full-index passes
-    like the tiered build) without materializing the vocabulary anywhere
-    — no filter, no driver collect."""
-    blocks = idx.postings
+    files is the 'vocab binary search' analogue, SURVEY §4) + decode of
+    the ``blocks`` columns → (term, doc_id, tf, dl) rows by default; add
+    ``pos_vb`` for positions. ``terms=None`` decodes the WHOLE postings
+    table (full-index passes like the tiered build) without
+    materializing the vocabulary anywhere — no filter, no driver
+    collect."""
+    df = idx.postings
     if terms is not None:
-        blocks = blocks.filter(F.col("term").isin(list(set(terms))))
-    blocks = blocks.select("term", "docs_vb", "tfs_vb", "dls_vb")
-    return blocks.mapInPandas(
-        _decode_blocks, schema="term string, doc_id long, tf long, dl long"
-    )
-
-
-def _decode_blocks_with_positions(batches):
-    """mapInPandas kernel: posting blocks → (term, doc_id, tf, positions)
-    rows — the 'getPostingsWithPositions' path
-    (DiskInvertedIndex.java:93-126): positions materialized only here,
-    ranked scoring never pays for them (lazy position decode, SURVEY §4)."""
-    from ..index.varbyte import decode_position_lists
-
-    for pdf in batches:
-        rows_t, rows_d, rows_tf, rows_p = [], [], [], []
-        for term, dvb, tvb, pvb in zip(
-            pdf["term"], pdf["docs_vb"], pdf["tfs_vb"], pdf["pos_vb"]
-        ):
-            d = decode_sorted(bytes(dvb))
-            t = vb_decode(bytes(tvb)).astype(np.int64)
-            plists = decode_position_lists(bytes(pvb), t)
-            rows_t.append(np.repeat(np.array([term], dtype=object), len(d)))
-            rows_d.append(d)
-            rows_tf.append(t)
-            rows_p.extend(p.astype(np.int32).tolist() for p in plists)
-        if rows_t:
-            yield pd.DataFrame(
-                {
-                    "term": np.concatenate(rows_t),
-                    "doc_id": np.concatenate(rows_d),
-                    "tf": np.concatenate(rows_tf),
-                    "positions": pd.Series(rows_p, dtype=object),
-                }
-            )
-
-
-def decoded_postings_with_positions(
-    idx: IndexHandle, terms: list[str] | None
-) -> DataFrame:
-    blocks = idx.postings
-    if terms is not None:
-        blocks = blocks.filter(F.col("term").isin(list(set(terms))))
-    blocks = blocks.select("term", "docs_vb", "tfs_vb", "pos_vb")
-    return blocks.mapInPandas(
-        _decode_blocks_with_positions,
-        schema="term string, doc_id long, tf long, positions array<int>",
-    )
+        df = df.filter(F.col("term").isin(list(set(terms))))
+    return decode_blocks(df.select("term", *blocks))
 
 
 def ranked_topk(
@@ -252,8 +241,9 @@ def ranked_topk(
     qw_df = F.broadcast(spark.createDataFrame(qw, "term string, wqt double"))
     partial = F.col("wqt") * scoring.tf_part_col(scorer, float(idx.meta["avgdl"]))
     # bm25's dl rides the decoded posting: no docs join on candidates
+    blocks = ("docs_vb", "tfs_vb", "dls_vb") if scorer == "bm25" else ("docs_vb", "tfs_vb")
     scored = (
-        decoded_postings(idx, [t for t, _ in qw])
+        decoded_postings(idx, [t for t, _ in qw], blocks)
         .join(qw_df, "term")
         .select("doc_id", partial.alias("partial"))
         .groupBy("doc_id")
@@ -396,7 +386,7 @@ def ranked_topk_batch(
         )
         partial = F.col("wqt") * scoring.tf_part_col(scorer)
         scored = (
-            decoded_postings(idx, live_terms)
+            decoded_postings(idx, live_terms, ("docs_vb", "tfs_vb"))
             .join(qdim, "term")
             .select("qid", "doc_id", partial.alias("partial"))
             .groupBy("qid", "doc_id")

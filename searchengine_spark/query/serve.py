@@ -38,6 +38,9 @@ from .exec import expand_ranked_query
 
 
 class LocalIndexReader:
+    # doc-metadata arrays stay in RAM up to this many docs (_load_docs_ram)
+    DOCS_RAM_CAP = 2_000_000
+
     def __init__(self, path: str, cache_blocks: int = 65536) -> None:
         from ..index.compact import recover_compaction
 
@@ -66,7 +69,6 @@ class LocalIndexReader:
         self._lexicon_ram: dict[str, int] | None = None
         self._stats_cache: dict[str, tuple] = {}
         self._docs_ram: tuple | None = None
-        self._docs_ram_cap = int(os.environ.get("SPARK_GRAFT_SERVE_DOCS_RAM", 2_000_000))
         self._rg: list[tuple] | None = None
 
     # -- lookups -----------------------------------------------------------
@@ -242,12 +244,12 @@ class LocalIndexReader:
     def _load_docs_ram(self) -> tuple | None:
         """Doc-metadata arrays (doc_id-sorted) for O(log n) winner
         lookups — loaded once when the shard fits the RAM gate
-        (SPARK_GRAFT_SERVE_DOCS_RAM, default 2M docs). Above the gate a
+        (``DOCS_RAM_CAP``, 2M docs). Above the gate a
         web-scale deployment shards the doc store; the pyarrow scan
         fallback below keeps this reader correct at any size."""
         if self._docs_ram is None:
             n = int(self.meta["n_docs"])
-            if n > self._docs_ram_cap:
+            if n > self.DOCS_RAM_CAP:
                 self._docs_ram = ()  # sentinel: too big, use scans
             else:
                 t = self.docs.to_table(columns=["doc_id", "url", "dl", "ld"])

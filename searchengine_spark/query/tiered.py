@@ -25,7 +25,7 @@ from collections import Counter
 from pyspark.sql import DataFrame, functions as F
 
 from . import scoring
-from .exec import IndexHandle, _decode_blocks_plain, expand_ranked_query
+from .exec import IndexHandle, decode_blocks, expand_ranked_query
 
 RETRIEVE_K = 20  # TieredRankedQueryParser.java:147
 
@@ -101,11 +101,10 @@ def tiered_ranked_topk(
     pair_dim = F.broadcast(
         spark.createDataFrame(pairs, "term string, tier int")
     )
-    blocks = idx.postings_tiered.join(pair_dim, ["term", "tier"]).select(
-        "term", "docs_vb", "tfs_vb"
-    )
-    decoded = blocks.mapInPandas(
-        _decode_blocks_plain, schema="term string, doc_id long, tf long"
+    decoded = decode_blocks(
+        idx.postings_tiered.join(pair_dim, ["term", "tier"]).select(
+            "term", "docs_vb", "tfs_vb"
+        )
     )
     qw_df = F.broadcast(spark.createDataFrame(weights, "term string, wqt double"))
     partial = F.col("wqt") * scoring.tf_part_col("tfidf_ref")
@@ -152,38 +151,14 @@ def scored_ranked_topk(
         return spark.createDataFrame([], schema)
     pair_dim = F.broadcast(spark.createDataFrame(pairs, "term string, tier int"))
     mult_dim = F.broadcast(spark.createDataFrame(mrows, "term string, mult double"))
-    blocks = idx.postings_scored.join(pair_dim, ["term", "tier"]).select(
-        "term", "docs_vb", "scores"
-    )
-
-    def _decode(batches):
-        import numpy as np
-        import pandas as pd
-
-        from ..index.varbyte import decode_sorted
-
-        for pdf in batches:
-            ts, ds, ss = [], [], []
-            for term, dvb, sc in zip(pdf["term"], pdf["docs_vb"], pdf["scores"]):
-                d = decode_sorted(bytes(dvb))
-                ts.append(np.repeat(np.array([term], dtype=object), len(d)))
-                ds.append(d)
-                ss.append(np.asarray(sc, dtype=np.float64))
-            if ts:
-                yield pd.DataFrame(
-                    {
-                        "term": np.concatenate(ts),
-                        "doc_id": np.concatenate(ds),
-                        "pscore": np.concatenate(ss),
-                    }
-                )
-
-    decoded = blocks.mapInPandas(
-        _decode, schema="term string, doc_id long, pscore double"
+    decoded = decode_blocks(
+        idx.postings_scored.join(pair_dim, ["term", "tier"]).select(
+            "term", "docs_vb", "scores"
+        )
     )
     scored = (
         decoded.join(mult_dim, "term")
-        .select("doc_id", (F.col("pscore") * F.col("mult")).alias("partial"))
+        .select("doc_id", (F.col("scores") * F.col("mult")).alias("partial"))
         .groupBy("doc_id")
         .agg(F.sum("partial").alias("acc"))
         .join(idx.docs, "doc_id")

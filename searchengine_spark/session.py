@@ -14,6 +14,24 @@ import os
 
 from pyspark.sql import SparkSession
 
+
+def default_driver_mem() -> str:
+    """``spark.driver.memory``: ``SPARK_GRAFT_DRIVER_MEM`` if set, else half
+    of this host's memory — the cgroup limit when one is set, else
+    physical RAM — capped at 8g and floored at 1g."""
+    env = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if env:
+        return env
+    ram = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    for limit in ("/sys/fs/cgroup/memory.max", "/sys/fs/cgroup/memory/memory.limit_in_bytes"):
+        try:
+            with open(limit) as f:
+                ram = min(ram, int(f.read()))
+        except (OSError, ValueError):  # absent, or "max": no limit
+            pass
+    return f"{min(8192, max(1024, ram // 2 // 2**20))}m"
+
+
 ENGINE_CONFS: dict[str, str] = {
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
@@ -25,7 +43,7 @@ ENGINE_CONFS: dict[str, str] = {
     # session timezone pinned for deterministic warc_ts round-trips
     "spark.sql.session.timeZone": "UTC",
     "spark.ui.enabled": "false",
-    "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
+    "spark.driver.memory": default_driver_mem(),
 }
 
 # shuffle/spill files on tmpfs — the sandbox stand-in for per-executor
@@ -51,6 +69,15 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra: dict[str, str] | None = None,
 ) -> SparkSession:
+    """Local session with ENGINE_CONFS. The repo root goes on
+    ``PYTHONPATH`` before the JVM starts: Spark's Python workers inherit
+    the JVM's environment, not the driver's ``sys.path``, and would
+    otherwise import ``searchengine_spark`` only when started from the
+    repo root."""
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    paths = os.environ.get("PYTHONPATH", "").split(os.pathsep)
+    if root not in paths:
+        os.environ["PYTHONPATH"] = os.pathsep.join([root] + [p for p in paths if p])
     cpus = default_cpus()
     b = SparkSession.builder.appName(app)
     b = b.master(master or f"local[{cpus}]")
@@ -70,18 +97,10 @@ def job_spark(app: str) -> SparkSession:
     gateway is announced in ``PYSPARK_GATEWAY_PORT``) the submitted master
     and ``--conf`` values stand and ENGINE_CONFS fill only the keys the
     submission left unset; a plain-python run gets ``get_spark``'s
-    host-sized ``local[n]`` session, so ``SPARK_GRAFT_CPUS`` applies.
-
-    A plain-python run also puts the repo root on ``PYTHONPATH`` before
-    the JVM starts: Spark's Python workers inherit the JVM's environment,
-    not the driver's ``sys.path``, and would otherwise import
-    ``searchengine_spark`` only when started from the repo root
+    host-sized ``local[n]`` session, so ``SPARK_GRAFT_CPUS`` applies and
+    the workers import the engine from the repo root
     (``spark-submit --py-files dist/engine.zip`` ships it instead)."""
     if "PYSPARK_GATEWAY_PORT" not in os.environ:
-        root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-        paths = os.environ.get("PYTHONPATH", "").split(os.pathsep)
-        if root not in paths:
-            os.environ["PYTHONPATH"] = os.pathsep.join([root] + [p for p in paths if p])
         return get_spark(app)
     from pyspark import SparkConf, SparkContext
 

@@ -58,6 +58,22 @@ def test_serve_boolean(reader, oracle_index, q):
     assert got == boolean_query_oracle(oracle_index, q), q
 
 
+def test_serve_doc_scan_fallback_equals_ram(built_index, reader):
+    """A shard above the doc-RAM gate answers from pyarrow docs scans
+    (``_doc_meta`` / ``_doc_norms``); its answers must equal the RAM
+    arrays' for both scorers and for boolean."""
+    scan = LocalIndexReader(built_index)
+    scan.DOCS_RAM_CAP = 0
+    for q in QUERIES:
+        for scorer in ("tfidf_ref", "bm25"):
+            assert scan.ranked_topk(q, k=20, scorer=scorer) == reader.ranked_topk(
+                q, k=20, scorer=scorer
+            ), (q, scorer)
+    for q in BOOL_QUERIES:
+        assert scan.boolean_query(q) == reader.boolean_query(q), q
+    assert reader._docs_ram and scan._docs_ram == ()
+
+
 def test_serve_latency(reader):
     reader.ranked_topk("fast data", k=20)  # warm the dataset handles
     t0 = time.time()

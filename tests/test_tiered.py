@@ -117,20 +117,22 @@ def test_tiered_truncates_vs_full(thandle, oracle_index):
 
 def test_streaming_labeler_equals_grouped(spark):
     """The memory-bounded streaming label pass (repartition(term) +
-    partition-local sort + mapInPandas, VERDICT r3 #7) must label
-    bit-identically to the grouped reference implementation — including
-    a hot term whose postings span MANY Arrow batches (forced via a tiny
-    maxRecordsPerBatch) and single-posting terms at run boundaries."""
-    import pandas as pd
-    from pyspark.sql import functions as F
+    partition-local sort + mapInPandas, VERDICT r3 #7) must label each
+    term bit-identically to the object-heap oracle the refmodel runs
+    (javapq.assign_tiers / assign_tiers_scored over the term's docID-
+    ordered postings) — including a hot term whose postings span MANY
+    Arrow batches (forced via a tiny maxRecordsPerBatch) and
+    single-posting terms at run boundaries."""
+    import math
 
+    import numpy as np
+
+    from searchengine_spark.index.javapq import assign_tiers, assign_tiers_scored
     from searchengine_spark.index.tiered import (
         LABEL_SCHEMA,
         SCORED_LABEL_SCHEMA,
-        _label_scored_fn,
         _label_scored_one,
         _label_tier_one,
-        _label_tiers_fn,
         _labels_streamed,
     )
 
@@ -143,47 +145,43 @@ def test_streaming_labeler_equals_grouped(spark):
     # singletons
     rows += [(f"rare{i}", 90_000 + i, 1) for i in range(25)]
     slim = spark.createDataFrame(rows, "term string, doc_id long, tf long")
+    by_term: dict[str, list[tuple[int, int]]] = {}
+    for t, d, tf in rows:
+        by_term.setdefault(t, []).append((d, tf))
 
+    def per_term(df, cols):
+        pdf = df.toPandas().sort_values(["term", "doc_id"])
+        return {
+            t: {c: g[c].to_numpy() for c in ("doc_id", *cols)}
+            for t, g in pdf.groupby("term")
+        }
+
+    n_docs = 123_456.0
     old_batch = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
     spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "512")
     try:
-        got = (
-            _labels_streamed(slim, _label_tier_one, LABEL_SCHEMA)
-            .toPandas()
-            .sort_values(["term", "doc_id"])
-            .reset_index(drop=True)
+        got = per_term(_labels_streamed(slim, _label_tier_one, LABEL_SCHEMA), ["tier"])
+        got_s = per_term(
+            _labels_streamed(slim, _label_scored_one(n_docs), SCORED_LABEL_SCHEMA),
+            ["tier", "score"],
         )
-        want = (
-            slim.groupBy("term")
-            .applyInPandas(_label_tiers_fn, schema=LABEL_SCHEMA)
-            .toPandas()
-            .sort_values(["term", "doc_id"])
-            .reset_index(drop=True)
-        )
-        pd.testing.assert_frame_equal(got, want)
-
-        n_docs = 123_456.0
-        got_s = (
-            _labels_streamed(slim, _label_scored_one(n_docs), SCORED_LABEL_SCHEMA)
-            .toPandas()
-            .sort_values(["term", "doc_id"])
-            .reset_index(drop=True)
-        )
-        want_s = (
-            slim.groupBy("term")
-            .applyInPandas(
-                lambda pdf: _label_scored_fn(pdf, n_docs),
-                schema=SCORED_LABEL_SCHEMA,
-            )
-            .toPandas()
-            .sort_values(["term", "doc_id"])
-            .reset_index(drop=True)
-        )
-        pd.testing.assert_frame_equal(got_s, want_s)  # incl. float64 bits
     finally:
         spark.conf.set(
             "spark.sql.execution.arrow.maxRecordsPerBatch", old_batch
         )
+    assert set(got) == set(got_s) == set(by_term)
+    for t, posts in by_term.items():
+        docs = [d for d, _ in sorted(posts)]
+        tfs = [tf for _, tf in sorted(posts)]
+        assert got[t]["doc_id"].tolist() == docs == got_s[t]["doc_id"].tolist()
+        assert got[t]["tier"].tolist() == assign_tiers(docs, tfs), t
+        wqt = math.log(1.0 + n_docs / len(docs))
+        scores = [(1.0 + math.log(tf)) * wqt for tf in tfs]
+        assert got_s[t]["tier"].tolist() == assign_tiers_scored(docs, scores), t
+        # float64 bit-equality, not closeness
+        assert got_s[t]["score"].view(np.int64).tolist() == (
+            np.asarray(scores, dtype=np.float64).view(np.int64).tolist()
+        ), t
 
 
 def test_streaming_labeler_million_posting_stopword(spark):

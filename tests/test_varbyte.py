@@ -68,6 +68,27 @@ def test_positions_flat_matches_nested():
     assert encode_positions_flat(np.array([], dtype=np.int64), np.array([], dtype=np.int64)) == b""
 
 
+@given(
+    st.lists(
+        st.lists(st.integers(min_value=0, max_value=2**40), min_size=1, max_size=8, unique=True),
+        max_size=30,
+    )
+)
+@settings(max_examples=100, deadline=None)
+def test_positions_flat_roundtrip(lists):
+    """decode_positions_flat inverts encode_positions_flat, and
+    decode_position_lists is its per-posting split."""
+    from searchengine_spark.index.varbyte import decode_positions_flat, encode_positions_flat
+
+    lists = [sorted(x) for x in lists]
+    tfs = np.array([len(x) for x in lists], dtype=np.int64)
+    flat = np.array([p for x in lists for p in x], dtype=np.int64)
+    buf = encode_positions_flat(flat, tfs)
+    got = decode_positions_flat(buf, tfs)
+    assert got.dtype == np.int64 and np.array_equal(got, flat)
+    assert [x.tolist() for x in decode_position_lists(buf, tfs)] == lists
+
+
 def test_position_lists_empty():
     assert encode_position_lists([]) == b""
     assert decode_position_lists(b"", np.array([], dtype=np.int64)) == []
